@@ -116,14 +116,22 @@ def _make_tf_kernel(docs_per_shard: int, deleted=None):
 
 
 def term_postings_frame(spark: SparkSession, index_path: str,
-                        terms: Iterable[str]) -> DataFrame:
+                        terms: Iterable[str], meta: dict | None = None,
+                        deleted=None) -> DataFrame:
     """(term, docid, tf, dlq) for ``terms`` — the distributed posting rows
     of one field index, tombstones masked, committed-generation snapshot
-    (same live-shard gating as search)."""
+    (same live-shard gating as search).
+
+    ``meta`` pins the manifest snapshot (default: the current one) and
+    ``deleted`` then carries that snapshot's tombstone arrays
+    (deletes.tombstone_arrays), so a caller that already read them — a
+    search, possibly under a point-in-time — reads the same docs."""
     from .deletes import tombstone_arrays
     from .indexer import live_shard_pred
 
-    meta = load_index_meta(index_path)
+    if meta is None:
+        meta = load_index_meta(index_path)
+        deleted = tombstone_arrays(spark, index_path, meta)
     docs_per_shard = int(meta["docs_per_shard"])
     live_pred = live_shard_pred(meta)
     terms = sorted(set(terms))
@@ -133,7 +141,6 @@ def term_postings_frame(spark: SparkSession, index_path: str,
              .where(F.col("term").isin(terms) & live_pred))
     packed = (read_parquet(spark, f"{index_path}/norms_packed")
               .where(live_pred))
-    deleted = tombstone_arrays(spark, index_path, meta)
     kernel = _make_tf_kernel(docs_per_shard, deleted)
     return (posts.groupBy("shard").cogroup(packed.groupBy("shard"))
             .applyInPandas(kernel, schema=_TF_SCHEMA))

@@ -28,7 +28,8 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterable
+from dataclasses import dataclass
+from typing import Callable, Iterable
 
 import numpy as np
 import pandas as pd
@@ -70,12 +71,10 @@ def open_pit(index_path: str) -> dict:
     schedule — the documented tradeoff of a file-based PIT (ES holds
     segment refcounts in-process; a shared-nothing reader cannot).
 
-    Documented departure from ES: TOMBSTONES are read live — a
-    delete-by-query issued after open_pit IS visible through the PIT
-    (ES pins per-segment live-docs bitsets; here tombstones are a shared
-    additive sidecar, and snapshotting them would mean collecting every
-    tombstone file list into the PIT handle). Appends and stats growth
-    are fully shielded; deletes are not."""
+    Tombstones are pinned too, like ES's per-segment live-docs bitsets:
+    every read of a search — the scorer's mask and the synonym postings
+    alike — takes the delete batches of the pinned manifest, so a delete
+    committed after open_pit is invisible through the PIT."""
     return dict(load_index_meta(index_path))
 
 
@@ -182,7 +181,7 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     ``synonyms`` maps an ANALYZED query term → its equivalents (also
     analyzed): a bare term clause naming a mapped term scores with Lucene
     SynonymQuery semantics — tf = Σ member tfs per doc, df = max member
-    df, cf = Σ member cf (see _rewrite_synonym_plans). Phrase members are
+    df, cf = Σ member cf (see _rewrite_pseudo_terms). Phrase members are
     not expanded.
 
     ``dv_filter`` = (name, lo, hi), either bound None for open: a FILTER-
@@ -228,17 +227,16 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     avgdl = float(meta["avgdl"])
     docs_per_shard = int(meta["docs_per_shard"])
     num_shards = int(meta["num_shards"])
-    # [shard_base, num_shards) is the committed live generation: compaction
-    # (streaming/incremental.compact_index) rewrites the index into fresh
-    # dense shards ABOVE the old range and flips shard_base in the manifest
-    # — a reader holding either manifest sees exactly one consistent
-    # generation (manifest-snapshot isolation, same as the append gate)
-    shard_base = int(meta.get("shard_base", 0))
-    # stats baseline: after a TIERED compaction the shard floor stays put
-    # (kept base shards) while the collapsed stats segment moves up
-    stats_base = int(meta.get("stats_base", shard_base))
+    # the committed live shards: compaction (streaming/incremental.
+    # compact_index) rewrites the index into fresh dense shards ABOVE the
+    # old range and flips shard_base in the manifest — a reader holding
+    # either manifest sees exactly one consistent generation (manifest-
+    # snapshot isolation, same as the append gate)
     from .indexer import live_shard_pred
     live_pred = live_shard_pred(meta)
+    # stats baseline: after a TIERED compaction the shard floor stays put
+    # (kept base shards) while the collapsed stats segment moves up
+    stats_base = int(meta.get("stats_base", meta.get("shard_base", 0)))
 
     # prefix wildcards ("te*") and fuzzy terms ("term~N") expand against
     # the term dictionary BEFORE stats lookup — one bounded union job for
@@ -302,145 +300,27 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
         df_map = {
             r["term"]: (int(r["df"]), int(r["cf"])) for r in stats_df.collect()}
 
-    # exact phrase scoring (positions sidecar): rewrite each phrase clause to
-    # a single pseudo-term whose postings are built from positional joins.
-    # Applies under BOTH bm25 (idf = Σ member idfs via idf_over, Lucene
-    # PhraseQuery semantics) and qld (the pseudo-term's own (df, cf) feed
-    # LMDirichlet's p(t|C) directly). Without the sidecar phrases stay
-    # bag-of-words, matching the reference's Lucene index which stores no
-    # positions (index.py:52).
+    # phrase, span, interval and phrase-prefix clauses and synonym groups
+    # each become ONE pseudo-term with its own postings
+    # (_rewrite_pseudo_terms); each kind's gate refuses what it cannot
+    # score. Synonyms replace bare terms only, so phrase members stay
+    # literal; replaced member terms drop out of the postings read below
+    leaves = [c for p in plans for c in iter_term_clauses(p.clauses)]
+    kinds = [k for k in _PSEUDO_KINDS if any(map(k.match, leaves))
+             and _pseudo_kind_enabled(k, meta, cfg.name, stats_override)]
+    # committed tombstones (operators/deletes.py): masked inside the kernel
+    # BEFORE the local top-k cut, with scoring statistics left at the
+    # manifest values — Lucene's exact semantics for an index with
+    # not-yet-merged deletes. None (the common case) costs nothing.
+    from .deletes import tombstone_arrays
+    deleted = tombstone_arrays(spark, index_path, meta)
     idf_over: dict[str, float] = {}
-    phrase_posts = None
-    has_phrases = any(c.phrase and len(c.terms) > 1
-                      for p in plans for c in iter_term_clauses(p.clauses))
-    if cfg.name in ("qljm", "classic", "dfr_inl2", "dfi", "pl2", "f2exp",
-                    "ib_ll", "bool") and \
-            meta.get("positions") and has_phrases:
-        # positional phrase scoring is wired for bm25 (idf_over = Σ member
-        # idfs) and qld (pseudo-term cf) only; silently degrading qljm /
-        # classic phrases to the bag-of-words fallback while positions
-        # EXIST would be the silent-wrong-answer class — refuse loudly
-        raise ValueError(
-            f"positional phrases are not implemented for scorer "
-            f"{cfg.name!r} (bm25/qld only)")
-    if cfg.name in ("bm25", "qld") and meta.get("positions") and has_phrases:
-        if stats_override is not None and cfg.name == "qld":
-            # bm25 phrases are federation-safe (idf = Σ member idfs from the
-            # GLOBAL df_map via idf_over); qld phrases score p(t|C) from the
-            # pseudo-term's PER-INDEX cf, which the override cannot globalize
-            raise ValueError(
-                "stats_override cannot score qld phrases: the phrase "
-                "pseudo-term's collection frequency is per-index")
-        plans, phrase_posts = _rewrite_phrase_plans(
-            spark, index_path, plans, df_map, idf_over, num_docs=num_docs,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            shard_base=shard_base, live_pred=live_pred)
-
-    # span-first clauses (Lucene SpanFirstQuery, Clause.first) → pseudo-
-    # terms whose tf counts only positions < end. Unlike phrases there is
-    # no reference bag-of-words behavior to degrade to, so a positions-less
-    # index (or an unwired scorer) refuses loudly instead
-    sf_posts = None
-    if any(getattr(c, "first", None) is not None
-           for p in plans for c in iter_term_clauses(p.clauses)):
-        if not meta.get("positions"):
-            raise ValueError(
-                "span_first clauses need the positions sidecar: rebuild "
-                "with IndexConfig(positions=True)")
-        if cfg.name not in ("bm25", "qld"):
-            raise ValueError(
-                f"span_first is not implemented for scorer {cfg.name!r} "
-                "(bm25/qld only)")
-        if stats_override is not None and cfg.name == "qld":
-            raise ValueError(
-                "stats_override cannot score qld span_first clauses: the "
-                "pseudo-term's collection frequency is per-index")
-        plans, sf_posts = _rewrite_spanfirst_plans(
-            spark, index_path, plans, df_map, idf_over, num_docs=num_docs,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            shard_base=shard_base, live_pred=live_pred)
-
-    # unordered proximity (span_near) → pseudo-terms over the positions
-    # sidecar
-    near_posts = None
-    if any(getattr(c, "near", None) is not None
-           for p in plans for c in iter_term_clauses(p.clauses)):
-        if not meta.get("positions"):
-            raise ValueError(
-                "span_near clauses need the positions sidecar: rebuild "
-                "with IndexConfig(positions=True)")
-        if cfg.name not in ("bm25", "qld"):
-            raise ValueError(
-                f"span_near is not implemented for scorer {cfg.name!r} "
-                "(bm25/qld only)")
-        if stats_override is not None and cfg.name == "qld":
-            raise ValueError(
-                "stats_override cannot score qld span_near clauses: the "
-                "pseudo-term's collection frequency is per-index")
-        plans, near_posts = _rewrite_spannear_plans(
-            spark, index_path, plans, df_map, idf_over, num_docs=num_docs,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            shard_base=shard_base, live_pred=live_pred)
-
-    # ordered minimal intervals (Lucene IntervalQuery) → pseudo-terms over
-    # the positions sidecar
-    intv_posts = None
-    if any(getattr(c, "gaps", None) is not None
-           for p in plans for c in iter_term_clauses(p.clauses)):
-        if not meta.get("positions"):
-            raise ValueError(
-                "interval clauses need the positions sidecar: rebuild "
-                "with IndexConfig(positions=True)")
-        if cfg.name not in ("bm25", "qld"):
-            raise ValueError(
-                f"interval is not implemented for scorer {cfg.name!r} "
-                "(bm25/qld only)")
-        if stats_override is not None and cfg.name == "qld":
-            raise ValueError(
-                "stats_override cannot score qld interval clauses: the "
-                "pseudo-term's collection frequency is per-index")
-        plans, intv_posts = _rewrite_interval_plans(
-            spark, index_path, plans, df_map, idf_over, num_docs=num_docs,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            shard_base=shard_base, live_pred=live_pred)
-
-    # phrase-prefix clauses (ES match_phrase_prefix) → pseudo-terms over
-    # the positions sidecar, prefix expanded against the term dictionary
-    pp_posts = None
-    if any(getattr(c, "pprefix", None) is not None
-           for p in plans for c in iter_term_clauses(p.clauses)):
-        if not meta.get("positions"):
-            raise ValueError(
-                "phrase_prefix clauses need the positions sidecar: rebuild "
-                "with IndexConfig(positions=True)")
-        if cfg.name not in ("bm25", "qld"):
-            raise ValueError(
-                f"phrase_prefix is not implemented for scorer {cfg.name!r} "
-                "(bm25/qld only)")
-        if stats_override is not None:
-            raise ValueError(
-                "stats_override cannot score phrase_prefix clauses: the "
-                "expansion and the pseudo-term's stats are per-index")
-        plans, pp_posts = _rewrite_phrase_prefix_plans(
-            spark, index_path, plans, df_map, idf_over, num_docs=num_docs,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            shard_base=shard_base, live_pred=live_pred)
-
-    # synonym groups → SynonymQuery pseudo-terms (after the phrase rewrite
-    # so phrase members stay literal; before the postings read so replaced
-    # member terms drop out of it)
-    syn_posts = None
-    if syn_groups:
-        plans, syn_posts = _rewrite_synonym_plans(
-            spark, index_path, plans, syn_groups, df_map,
-            num_shards=num_shards, docs_per_shard=docs_per_shard,
-            block_size=int(meta.get("block_size", 128)),
-            live_pred=live_pred)
+    pseudo_posts = None
+    if kinds or syn_groups:
+        plans, pseudo_posts = _rewrite_pseudo_terms(
+            spark, index_path, plans, kinds, syn_groups, df_map, idf_over,
+            meta=meta, live_pred=live_pred, deleted=deleted,
+            num_docs=num_docs)
 
     # postings read is filtered on the POST-rewrite plans' real terms — a
     # word appearing only inside phrases is read from positions/, not here.
@@ -452,18 +332,8 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
                          for t, _ in c.terms if not t.startswith("\x01")})
     posts = (read_parquet(spark, f"{index_path}/postings")
              .where(F.col("term").isin(live_terms) & live_pred))
-    if phrase_posts is not None:
-        posts = posts.unionByName(phrase_posts)
-    if sf_posts is not None:
-        posts = posts.unionByName(sf_posts)
-    if near_posts is not None:
-        posts = posts.unionByName(near_posts)
-    if intv_posts is not None:
-        posts = posts.unionByName(intv_posts)
-    if pp_posts is not None:
-        posts = posts.unionByName(pp_posts)
-    if syn_posts is not None:
-        posts = posts.unionByName(syn_posts)
+    if pseudo_posts is not None:
+        posts = posts.unionByName(pseudo_posts)
     # packed norms: ONE blob row per shard (the full norms table is only
     # touched at the end, partition-pruned, to resolve top-k external ids)
     norms_packed = (read_parquet(spark, f"{index_path}/norms_packed")
@@ -540,13 +410,6 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
         use_pruner = False  # seed pass could under-seed from filtered docs
     if dv_boost is not None:
         use_pruner = False  # block-max bounds don't see the decay factor
-
-    # committed tombstones (operators/deletes.py): masked inside the kernel
-    # BEFORE the local top-k cut, with scoring statistics left at the
-    # manifest values — Lucene's exact semantics for an index with
-    # not-yet-merged deletes. None (the common case) costs nothing.
-    from .deletes import tombstone_arrays
-    deleted = tombstone_arrays(spark, index_path, meta)
 
     scorer = _make_shard_scorer(
         plans_payload, df_map, scorer=cfg.name,
@@ -660,7 +523,7 @@ def more_like_this(spark: SparkSession, index_path: str, like_text: str,
     n = float(meta["num_docs"])
     ranked = sorted(
         (-float(tf[r["term"]])
-         * math.log(1.0 + (n - float(r["df"]) + 0.5) / (float(r["df"]) + 0.5)),
+         * _bm25_idf(n, float(r["df"])),
          r["term"])
         for r in rows if float(r["df"]) >= min_df)
     top = [t for _, t in ranked[:max_terms]]
@@ -1402,988 +1265,508 @@ def _expand_multiterm_plans(spark: SparkSession, index_path: str,
 _expand_prefix_plans = _expand_multiterm_plans
 
 
+MAX_PHRASE_PREFIX_EXPANSIONS = 50  # ES match_phrase_prefix max_expansions
+
+
+def _bm25_idf(num_docs: float, df: float) -> float:
+    return math.log(1.0 + (num_docs - df + 0.5) / (df + 0.5))
+
+
+# pseudo-term names: the \x01 prefix keeps them out of the real term
+# namespace (no analyzed token can contain a control char), so the
+# postings read skips them and each kind's spellings never collide
 def _phrase_pseudo_term(words: list[str], slop: int = 0) -> str:
-    # \x01 prefix keeps pseudo-terms out of the real term namespace
-    # (no analyzed token can contain a control char); sloppy phrases get
-    # their own namespace so "a b" and "a b"~3 coexist in one batch
+    # sloppy phrases get their own namespace so "a b" and "a b"~3 coexist
     if slop:
         return f"\x01near{slop}:" + " ".join(words)
     return "\x01phrase:" + " ".join(words)
 
 
 def _synonym_pseudo_term(group: tuple[str, ...]) -> str:
-    # \x01 namespace like phrases; the group is stored sorted so the same
-    # synonym set from different query spellings shares one pseudo-term
+    # the group is stored sorted so the same synonym set from different
+    # query spellings shares one pseudo-term
     return "\x01syn:" + "|".join(group)
 
 
-def _rewrite_synonym_plans(spark, index_path, plans, syn_groups, df_map, *,
-                           num_shards, docs_per_shard, block_size,
-                           live_pred):
-    """Rewrite synonym-bearing term clauses to pseudo-terms with Lucene
-    SynonymQuery semantics (SynonymQuery.createWeight): per-document tf =
-    Σ member tfs, docFreq = MAX member df, totalTermFreq = Σ member cf —
-    the members score as ONE term, not an OR of independently-idf'd terms
-    (an OR overweights a concept that happens to have many surface forms).
-
-    ``syn_groups`` maps a query term → its full sorted member tuple. All
-    groups build in ONE pass: the members' postings decode through the
-    bm25f tf-frame kernel (pushed In filter, tombstones masked), one
-    groupBy (group, shard, docid) sums member tfs, and the pseudo postings
-    encode through the SAME blocked varbyte kernel as regular postings —
-    the scorer needs no synonym-specific path. Stats come from df_map (the
-    members were folded into the stats read), so the rewrite also works
-    under a federation stats_override — max/sum of GLOBAL member stats.
-
-    Scale shape: decode volume = the members' postings (the same rows an
-    OR query would score), one extra shuffle to regroup by (group, doc).
-    Synonyms inside phrases are not rewritten (Lucene expresses those as
-    graph/span queries; out of scope — members only replace bare terms)."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-
-    groups = sorted({g for g in syn_groups.values()})
-    gid_of = {g: i for i, g in enumerate(groups)}
-    # pseudo stats from df_map: max df / Σ cf over members present
-    live: dict[tuple[str, ...], str] = {}
-    for g in groups:
-        stats = [df_map[w] for w in g if w in df_map and df_map[w][0] > 0]
-        if not stats:
-            continue  # no member indexed: pseudo stays out of df_map
-        pseudo = _synonym_pseudo_term(g)
-        df_map[pseudo] = (max(s[0] for s in stats),
-                          sum(s[1] for s in stats))
-        live[g] = pseudo
-
-    def rw(clauses):
-        out = []
-        for c in clauses:
-            if c.group:
-                out.append(Clause(c.occur, c.boost, list(c.terms),
-                                  group=rw(c.group)))
-            elif (not c.phrase and len(c.terms) == 1
-                  and c.terms[0][0] in syn_groups):
-                g = syn_groups[c.terms[0][0]]
-                pseudo = live.get(g)
-                terms = ([(pseudo, c.terms[0][1])] if pseudo
-                         else list(c.terms))  # dead group: keep the literal
-                out.append(Clause(c.occur, c.boost, terms, phrase=c.phrase))
-            else:
-                out.append(c)
-        return out
-
-    plans = [QueryPlan(p.qid, rw(p.clauses), p.mode) for p in plans]
-    if not live:
-        return plans, None
-
-    from .bm25f import term_postings_frame
-    members = sorted({w for g in live for w in g})
-    decoded = term_postings_frame(spark, index_path, members)
-    memb = spark.createDataFrame(
-        [(gid_of[g], w) for g in live for w in g],
-        "gid int, term string")
-    name_df = spark.createDataFrame(
-        [(gid_of[g], live[g]) for g in live], "gid int, term string")
-    base_kernel = _make_postings_kernel(block_size, docs_per_shard)
-
-    def encode(batches):
-        for b in batches:
-            if not b.empty:
-                yield from base_kernel(iter([b]))
-
-    union = (decoded.join(F.broadcast(memb), "term")
-             .withColumn("shard",
-                         (F.col("docid") / F.lit(docs_per_shard)).cast("int"))
-             .groupBy("gid", "shard", "docid")
-             .agg(F.sum("tf").cast("int").alias("tf"),
-                  F.max("dlq").cast("int").alias("dlq"))
-             .join(F.broadcast(name_df), "gid")
-             .select("shard", "term", "docid", "tf", "dlq")
-             .repartition(num_shards, "shard")
-             .sortWithinPartitions("shard", "term", "docid")
-             .mapInPandas(encode, schema=_PSCHEMA))
-    return plans, union
-
-
-def _spanfirst_pseudo_term(term: str, end: int) -> str:
-    # \x01 namespace like phrases/synonyms — never collides with analyzed
-    # terms, and the postings read skips it (read from the rewrite union)
-    return f"\x01first:{end}:{term}"
-
-
-MAX_PHRASE_PREFIX_EXPANSIONS = 50  # ES match_phrase_prefix max_expansions
-
-
-def _phrase_prefix_pseudo_term(words: tuple[str, ...], prefix: str) -> str:
-    return "\x01pp:" + "\x01".join(words) + "\x01*" + prefix
-
-
-def _spannear_pseudo_term(a: str, b: str, slop: int,
-                          inv: bool = False) -> str:
-    tag = "nearnot" if inv else "near"
-    return f"\x01{tag}:{slop}:{a}\x01{b}"
-
-
-def _rewrite_spannear_plans(spark, index_path, plans, df_map, idf_over, *,
-                            num_docs, num_shards, docs_per_shard,
-                            block_size, shard_base=0, live_pred=None):
-    """Rewrite unordered-proximity clauses (Lucene SpanNearQuery with
-    inOrder=false — semantics and the anchored-counting departure
-    documented at queryparse.Clause.near) to pseudo-terms over the
-    positions sidecar: ONE positions read for all pairs joined to a
-    broadcast spec table, one groupBy (sid, shard, docid) whose fold
-    counts first-word occurrences with ANY second-word occurrence within
-    the window in either direction, stats in one collect, pseudo postings
-    through the same blocked varbyte kernel as everything else."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-    from ..functions.smallfloat import quantize_length
-
-    specs: dict[tuple[str, str, int, bool], str] = {}
-    for p in plans:
-        for c in iter_term_clauses(p.clauses):
-            near = getattr(c, "near", None)
-            if near is None:
-                continue
-            if len(c.terms) != 2 or c.phrase or c.prefix:
-                raise ValueError(
-                    f"span_near clause must carry exactly two plain "
-                    f"terms (got {c!r})")
-            a, b = c.terms[0][0], c.terms[1][0]
-            if a == b:
-                raise ValueError(
-                    f"span_near needs two distinct terms, got {a!r} twice")
-            inv = bool(getattr(c, "near_not", False))
-            specs.setdefault((a, b, int(near), inv),
-                             _spannear_pseudo_term(a, b, int(near), inv))
-    if not specs:
-        return plans, None
-
-    if live_pred is None:
-        live_pred = ((F.col("shard") >= shard_base) &
-                     (F.col("shard") < num_shards))
-    sid_of = {key: i for i, key in enumerate(specs)}
-    pseudo_of_sid = {i: specs[k] for k, i in sid_of.items()}
-    memb_rows = []
-    for (a, b, slop, inv), sid in sid_of.items():
-        memb_rows.append((sid, a, 0, slop, int(inv)))
-        memb_rows.append((sid, b, 1, slop, int(inv)))
-    all_words = sorted({w for _s, w, _r, _sl, _i in memb_rows})
-
-    pos = (read_parquet(spark, f"{index_path}/positions")
-           .where(F.col("term").isin(all_words) & live_pred))
-    norms = (read_parquet(spark, f"{index_path}/norms")
-             .where(live_pred)
-             .select("shard", "docid", "dl"))
-    memb = spark.createDataFrame(
-        memb_rows, "sid int, word string, role int, slop int, inv int")
-
-    joined = (pos.join(F.broadcast(memb), pos["term"] == memb["word"])
-              .select("sid", "shard", "docid", "role", "slop", "inv",
-                      "positions"))
-    grouped = (joined.groupBy("sid", "shard", "docid")
-               .agg(F.count("*").alias("nm"), F.max("slop").alias("slop"),
-                    F.max("inv").alias("inv"),
-                    F.collect_list(F.struct("role", "positions"))
-                    .alias("items"))
-               # near needs BOTH words in the doc; near_not keeps docs
-               # holding only the include word (nothing nearby to exclude
-               # — every occurrence counts). Only-exclude docs survive
-               # this filter but die at tf NULL below (pa is NULL).
-               .where((F.col("nm") == 2) | (F.col("inv") == 1)))
-    items = F.col("items")
-    pa = F.try_element_at(
-        F.transform(F.filter(items, lambda s: s["role"] == 0),
-                    lambda s: s["positions"]), F.lit(1))
-    # near_not over a doc with NO exclude occurrences: exists() over a
-    # NULL array is NULL and would poison the negation — coalesce to
-    # empty so "nothing nearby" reads false, not unknown
-    pb = F.coalesce(
+def _positions_of(items, role):
+    """Positions of the ``role`` item of a grouped (role, positions) list;
+    empty, never NULL, when the doc lacks it — a NULL would poison
+    exists() and its negation through three-valued logic."""
+    return F.coalesce(
         F.try_element_at(
-            F.transform(F.filter(items, lambda s: s["role"] == 1),
+            F.transform(F.filter(items, lambda s: s["role"] == role),
                         lambda s: s["positions"]), F.lit(1)),
         F.array().cast("array<int>"))
+
+
+def _shifted(s):
+    # a member's positions moved back by its offset: a phrase occurrence
+    # starting at p puts p into every member's shifted array
+    return F.transform(s["positions"], lambda x: x - s["role"])
+
+
+def _intersect_all(arrs):
+    # try_element_at: codegen may evaluate the fold before the caller's
+    # member-count guard, and an empty list must fold to NULL (a NULL tf
+    # is dropped), not raise
+    return F.aggregate(arrs, F.try_element_at(arrs, F.lit(1)),
+                       lambda acc, a: F.array_intersect(acc, a))
+
+
+def _phrase_tf(items):
+    exact = F.size(_intersect_all(F.transform(items, _shifted)))
+    # sloppy: from each first-word position chain every later word to its
+    # EARLIEST position after the previous link — a dead anchor's cur goes
+    # NULL and stays NULL (filter over a NULL bound is empty, array_min of
+    # empty is NULL); an anchor counts when its width excess is ≤ slop
+    parrs = F.transform(F.array_sort(items), lambda s: s["positions"])
+    init = F.transform(F.try_element_at(parrs, F.lit(1)),
+                       lambda p: F.struct(p.alias("start"), p.alias("cur")))
+    chained = F.aggregate(
+        F.slice(parrs, F.lit(2), F.size(parrs) - 1), init,
+        lambda acc, nxt: F.transform(acc, lambda s: F.struct(
+            s["start"].alias("start"),
+            F.array_min(F.filter(nxt, lambda x: x > s["cur"])).alias("cur"))))
+    sloppy = F.size(F.filter(
+        chained, lambda s: s["cur"].isNotNull()
+        & (s["cur"] - s["start"] - (F.col("nw") - 1) <= F.col("slop"))))
+    return F.when(F.size(items) == F.col("nw"),
+                  F.when(F.col("slop") == 0, exact).otherwise(sloppy))
+
+
+def _span_first_tf(items):
+    return F.size(F.filter(_positions_of(items, 0),
+                           lambda x: x < F.col("fend")))
+
+
+def _span_near_tf(items):
     # anchors: first-word positions with a second-word occurrence within
     # slop intervening tokens in EITHER direction (|p−q| − 1 ≤ slop);
-    # near_not counts the complement (see queryparse.Clause.near_not)
-    def _window_hit(p):
+    # span_not counts the complement. A doc with no second word has an
+    # empty window side: near counts nothing there, span_not everything
+    pa, pb = _positions_of(items, 0), _positions_of(items, 1)
+
+    def hit(p):
         return F.exists(pb, lambda q: F.abs(p - q) - 1 <= F.col("slop"))
 
-    tf_col = F.size(F.filter(
-        pa, lambda p: F.when(F.col("inv") == 1,
-                             ~_window_hit(p)).otherwise(_window_hit(p))))
-    tf_all = (grouped
-              .select("sid", "shard", "docid", tf_col.alias("tf"))
-              .where(F.col("tf") > 0)
-              .join(norms, ["shard", "docid"])
-              .localCheckpoint(eager=True))
-
-    stats_by_sid = {int(r["sid"]): (int(r["df"]), int(r["cf"]))
-                    for r in tf_all.groupBy("sid")
-                    .agg(F.count("*").alias("df"),
-                         F.sum("tf").alias("cf")).collect()}
-    live_sids = []
-    for (a, b, slop, inv), sid in sid_of.items():
-        st = stats_by_sid.get(sid)
-        if not st or st[0] == 0:
-            continue
-        pseudo = pseudo_of_sid[sid]
-        df_map[pseudo] = st
-        # near: Σ both idfs (SpanNearQuery weight over both terms);
-        # near_not: the INCLUDE term's idf only — the exclusion shapes tf,
-        # never the weight (SpanNotQuery scores from the include span)
-        words = (a,) if inv else (a, b)
-        idf_over[pseudo] = sum(
-            math.log(1.0 + (num_docs - df_map[w][0] + 0.5)
-                     / (df_map[w][0] + 0.5))
-            for w in words if w in df_map and df_map[w][0] > 0)
-        live_sids.append(sid)
-    if not live_sids:
-        union = None
-    else:
-        base_kernel = _make_postings_kernel(block_size, docs_per_shard)
-
-        def encode(batches):
-            def add_dlq(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = pdf.assign(
-                    dlq=quantize_length(pdf["dl"].to_numpy()).astype("int32"))
-                return out[["shard", "term", "docid", "tf", "dlq"]]
-            yield from base_kernel(add_dlq(b) for b in batches if not b.empty)
-
-        name_df = spark.createDataFrame(
-            [(sid, pseudo_of_sid[sid]) for sid in live_sids],
-            "sid int, term string")
-        union = (tf_all.join(F.broadcast(name_df), "sid")
-                 .select("shard", "term", "docid",
-                         F.col("tf").cast("int"), "dl")
-                 .repartition(num_shards, "shard")
-                 .sortWithinPartitions("shard", "term", "docid")
-                 .mapInPandas(encode, schema=_PSCHEMA))
-
-    def swap(clauses):
-        cl = []
-        for c in clauses:
-            if c.group:
-                cl.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
-            elif getattr(c, "near", None) is not None:
-                pseudo = specs[(c.terms[0][0], c.terms[1][0], int(c.near),
-                                bool(getattr(c, "near_not", False)))]
-                cl.append(Clause(c.occur, c.boost, [(pseudo, 1.0)]))
-            else:
-                cl.append(c)
-        return cl
-
-    new_plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    return new_plans, union
+    return F.size(F.filter(pa, lambda p: F.when(F.col("inv") == 1, ~hit(p))
+                           .otherwise(hit(p))))
 
 
-def _interval_pseudo_term(words: tuple[str, ...], gaps: int, x: str | None,
-                          h: str | None = None) -> str:
-    return (f"\x01intv:{gaps}:" + "\x01".join(words)
-            + f"\x01!{x or ''}\x01+{h or ''}")
+def _interval_tf(items):
+    # member j has role j (a repeated word holds several roles), the
+    # exclusion term −2, the containment term −3
+    pa, px, ph = (_positions_of(items, r) for r in (0, -2, -3))
+    tail = F.transform(F.sequence(F.lit(1), F.col("nw") - 1),
+                       lambda r: _positions_of(items, r))
 
+    def chain(p):
+        # earliest-after greedy chain; a NULL link propagates to the end
+        return F.aggregate(tail, p, lambda acc, arr: F.array_min(
+            F.filter(arr, lambda j: j > acc)))
 
-def _rewrite_interval_plans(spark, index_path, plans, df_map, idf_over, *,
-                            num_docs, num_shards, docs_per_shard,
-                            block_size, shard_base=0, live_pred=None):
-    """Rewrite ordered-interval clauses (Lucene IntervalQuery — semantics
-    and the minimal-interval definition at queryparse.Clause.gaps) to
-    pseudo-terms over the positions sidecar, the same single-job shape as
-    the span_near rewrite: ONE positions read for all specs' words joined
-    to a broadcast spec table, one groupBy (sid, shard, docid) whose
-    Catalyst fold counts minimal intervals over n ORDERED words — the
-    greedy chain from each first-word position p (each later word at its
-    earliest position after the previous link) ends at q; chains are
-    monotone in p, so (p, q) is minimal iff NO later first-word
-    occurrence chains to the same q, and it counts iff additionally
-    q − p − (n−1) ≤ max_gaps (Intervals.maxgaps: total intervening
-    non-member tokens), no exclusion-term occurrence lies in [p, q]
-    (Intervals.notContaining) and, when required, a containing-term
-    occurrence does (Intervals.containing) — stats in one collect, pseudo
-    postings through the same blocked varbyte kernel as everything else.
-    Per-doc cost is O(|first-word positions|² · n · log) from the
-    minimality re-chain inside exists() — the same complexity class as
-    the sloppy-phrase kernel's correlated mins, fine at real-query
-    occurrence counts."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-    from ..functions.smallfloat import quantize_length
-
-    specs: dict[tuple, str] = {}
-    for p in plans:
-        for c in iter_term_clauses(p.clauses):
-            g = getattr(c, "gaps", None)
-            if g is None:
-                continue
-            if len(c.terms) < 2 or c.phrase or c.prefix:
-                raise ValueError(
-                    f"interval clause must carry two or more plain "
-                    f"terms (got {c!r})")
-            words = tuple(t for t, _ in c.terms)
-            x = getattr(c, "intv_not", None)
-            if x in words:
-                raise ValueError(
-                    f"interval not_containing term {x!r} collides with a "
-                    f"member")
-            h = getattr(c, "intv_has", None)
-            if h is not None and h == x:
-                raise ValueError(
-                    f"interval containing and not_containing both {x!r}")
-            specs.setdefault((words, int(g), x, h),
-                             _interval_pseudo_term(words, int(g), x, h))
-    if not specs:
-        return plans, None
-
-    if live_pred is None:
-        live_pred = ((F.col("shard") >= shard_base) &
-                     (F.col("shard") < num_shards))
-    sid_of = {key: i for i, key in enumerate(specs)}
-    pseudo_of_sid = {i: specs[k] for k, i in sid_of.items()}
-    # member word j → role j (a repeated word holds several roles — its
-    # one positions row fans out through the join); exclusion role −2,
-    # containment role −3
-    memb_rows = []
-    for (words, g, x, h), sid in sid_of.items():
-        need = int(h is not None)  # sid requires a containing hit
-        nw = len(words)
-        for j, w in enumerate(words):
-            memb_rows.append((sid, w, j, g, need, nw))
-        if x is not None:
-            memb_rows.append((sid, x, -2, g, need, nw))
-        if h is not None:
-            memb_rows.append((sid, h, -3, g, need, nw))
-    all_words = sorted({r[1] for r in memb_rows})
-
-    pos = (read_parquet(spark, f"{index_path}/positions")
-           .where(F.col("term").isin(all_words) & live_pred))
-    norms = (read_parquet(spark, f"{index_path}/norms")
-             .where(live_pred)
-             .select("shard", "docid", "dl"))
-    memb = spark.createDataFrame(
-        memb_rows,
-        "sid int, word string, role int, gaps int, need int, nw int")
-
-    joined = (pos.join(F.broadcast(memb), pos["term"] == memb["word"])
-              .select("sid", "shard", "docid", "role", "gaps", "need",
-                      "nw", "positions"))
-    grouped = (joined.groupBy("sid", "shard", "docid")
-               .agg(F.max("gaps").alias("gaps"),
-                    F.max("need").alias("need"),
-                    F.max("nw").alias("nw"),
-                    F.collect_list(F.struct("role", "positions"))
-                    .alias("items"))
-               # a chain needs EVERY ordered member in the doc; a row
-               # holding only the exclusion term can never match
-               .where(F.size(F.filter(
-                   F.col("items"), lambda s: s["role"] >= 0))
-                   == F.col("nw")))
-    items = F.col("items")
-
-    def _role(r):
-        return F.coalesce(
-            F.try_element_at(
-                F.transform(F.filter(items, lambda s: s["role"] == r),
-                            lambda s: s["positions"]), F.lit(1)),
-            F.array().cast("array<int>"))
-
-    pa, px, ph = _role(0), _role(-2), _role(-3)
-    # position arrays for roles 1..nw−1, chain order
-    tail = F.transform(
-        F.sequence(F.lit(1), F.col("nw") - 1),
-        lambda r: F.coalesce(
-            F.try_element_at(
-                F.transform(F.filter(items, lambda s: s["role"] == r),
-                            lambda s: s["positions"]), F.lit(1)),
-            F.array().cast("array<int>")))
-
-    def _chain(p):
-        # earliest-after greedy chain: each later word at its first
-        # position after the previous link; NULL acc propagates (j > NULL
-        # filters everything, array_min of empty is NULL)
-        return F.aggregate(
-            tail, p, lambda acc, arr: F.array_min(
-                F.filter(arr, lambda j: j > acc)))
-
-    # minimal intervals: chains are monotone in p, so (p, q) is minimal
-    # iff no later first-word occurrence chains to the same q. chain(p2)
-    # of a doomed start is NULL; the equality must read FALSE there, not
-    # NULL — an uncoalesced NULL element makes exists() return NULL
-    # (three-valued logic) and a NULL-poisoned ~exists would silently
-    # drop valid anchors
-    def _valid(p):
-        q = _chain(p)
+    # chains are monotone in p, so (p, q) is minimal iff no later
+    # first-word occurrence chains to the same q. chain(p2) of a doomed
+    # start is NULL: the equality must read FALSE there, or exists()
+    # returns NULL and the negation silently drops valid anchors
+    def valid(p):
+        q = chain(p)
         return (q.isNotNull()
-                & ((q - p - (F.col("nw") - F.lit(1))) <= F.col("gaps"))
+                & (q - p - (F.col("nw") - 1) <= F.col("gaps"))
                 & ~F.exists(pa, lambda p2: F.coalesce(
-                    (p2 > p) & (_chain(p2) == q), F.lit(False)))
-                & ~F.exists(px, lambda xx: (xx >= p) & (xx <= q))
+                    (p2 > p) & (chain(p2) == q), F.lit(False)))
+                & ~F.exists(px, lambda x: (x >= p) & (x <= q))
                 & ((F.col("need") == 0)
-                   | F.exists(ph, lambda hh: (hh >= p) & (hh <= q))))
+                   | F.exists(ph, lambda h: (h >= p) & (h <= q))))
 
-    tf_col = F.size(F.filter(pa, _valid))
-    tf_all = (grouped
-              .select("sid", "shard", "docid", tf_col.alias("tf"))
-              .where(F.col("tf") > 0)
-              .join(norms, ["shard", "docid"])
-              .localCheckpoint(eager=True))
-
-    stats_by_sid = {int(r["sid"]): (int(r["df"]), int(r["cf"]))
-                    for r in tf_all.groupBy("sid")
-                    .agg(F.count("*").alias("df"),
-                         F.sum("tf").alias("cf")).collect()}
-    live_sids = []
-    for (words, g, x, h), sid in sid_of.items():
-        st = stats_by_sid.get(sid)
-        if not st or st[0] == 0:
-            continue
-        pseudo = pseudo_of_sid[sid]
-        df_map[pseudo] = st
-        # Σ ordered members' idfs, repeats counted per occurrence (the
-        # SpanWeight convention the phrase/near rewrites follow); the
-        # exclusion/containment terms never weigh
-        idf_over[pseudo] = sum(
-            math.log(1.0 + (num_docs - df_map[w][0] + 0.5)
-                     / (df_map[w][0] + 0.5))
-            for w in words if w in df_map and df_map[w][0] > 0)
-        live_sids.append(sid)
-    if not live_sids:
-        union = None
-    else:
-        base_kernel = _make_postings_kernel(block_size, docs_per_shard)
-
-        def encode(batches):
-            def add_dlq(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = pdf.assign(
-                    dlq=quantize_length(pdf["dl"].to_numpy()).astype("int32"))
-                return out[["shard", "term", "docid", "tf", "dlq"]]
-            yield from base_kernel(add_dlq(b) for b in batches if not b.empty)
-
-        name_df = spark.createDataFrame(
-            [(sid, pseudo_of_sid[sid]) for sid in live_sids],
-            "sid int, term string")
-        union = (tf_all.join(F.broadcast(name_df), "sid")
-                 .select("shard", "term", "docid",
-                         F.col("tf").cast("int"), "dl")
-                 .repartition(num_shards, "shard")
-                 .sortWithinPartitions("shard", "term", "docid")
-                 .mapInPandas(encode, schema=_PSCHEMA))
-
-    def swap(clauses):
-        cl = []
-        for c in clauses:
-            if c.group:
-                cl.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
-            elif getattr(c, "gaps", None) is not None:
-                pseudo = specs[(tuple(t for t, _ in c.terms), int(c.gaps),
-                                getattr(c, "intv_not", None),
-                                getattr(c, "intv_has", None))]
-                cl.append(Clause(c.occur, c.boost, [(pseudo, 1.0)]))
-            else:
-                cl.append(c)
-        return cl
-
-    new_plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    return new_plans, union
+    ordered = F.size(F.filter(items, lambda s: s["role"] >= 0))
+    return F.when(ordered == F.col("nw"), F.size(F.filter(pa, valid)))
 
 
-def _rewrite_phrase_prefix_plans(spark, index_path, plans, df_map, idf_over,
-                                 *, num_docs, num_shards, docs_per_shard,
-                                 block_size, shard_base=0, live_pred=None,
-                                 max_expansions=None):
-    """Rewrite phrase-prefix clauses (ES match_phrase_prefix — see
-    queryparse.Clause.pprefix for the full semantics and the documented
-    SynonymQuery-idf departure from Lucene MultiPhraseQuery) to
-    pseudo-terms backed by positional postings, the same shape as the
-    phrase rewrite: ONE bounded expansion job for all prefixes (term-order
-    ``limit(max_expansions)`` over the term-sorted stats scan — Lucene's
-    setMaxExpansions truncates silently, it does not throw), one positions
-    read for fixed words ∪ expansions joined to a broadcast membership
-    table, one groupBy (pid, shard, docid) whose Catalyst fold intersects
-    the shifted fixed-word arrays with the UNION of the expansion terms'
-    shifted arrays (tf = anchors completed by any expansion), stats in one
-    collect, pseudo postings through the same blocked varbyte kernel.
+def _phrase_prefix_tf(items):
+    # fixed words have roles 0..nw−1, every expansion role nw: anchors
+    # where the fixed words line up and ANY expansion completes them
+    fixed = F.transform(F.filter(items, lambda s: s["role"] < F.col("nw")),
+                        _shifted)
+    completions = F.array_distinct(F.flatten(F.transform(
+        F.filter(items, lambda s: s["role"] == F.col("nw")), _shifted)))
+    return F.when(F.size(fixed) == F.col("nw"), F.size(
+        F.array_intersect(_intersect_all(fixed), completions)))
 
-    Scale shape: expansion candidates never exceed max_expansions per
-    prefix ON THE DRIVER (TakeOrderedAndProject); the positions groupBy is
-    keyed (pid, shard, docid) so head-term rows stay bounded per shard."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-    from ..functions.smallfloat import quantize_length
 
-    if max_expansions is None:  # read at call time so tests/config can
-        max_expansions = MAX_PHRASE_PREFIX_EXPANSIONS  # override the cap
-    specs: dict[tuple[tuple[str, ...], str], str] = {}
-    for p in plans:
-        for c in iter_term_clauses(p.clauses):
-            pp = getattr(c, "pprefix", None)
-            if pp is None:
-                continue
-            if c.phrase or c.prefix or c.fuzzy is not None or not c.terms:
-                raise ValueError(
-                    f"phrase_prefix clause must carry plain fixed words "
-                    f"(got {c!r})")
-            key = (tuple(t for t, _ in c.terms), pp)
-            specs.setdefault(key, _phrase_prefix_pseudo_term(*key))
-    if not specs:
-        return plans, None
+def _span_first_key(c):
+    if c.phrase or c.prefix or c.fuzzy is not None or c.trange is not None \
+            or c.wild is not None or c.regex is not None \
+            or len(c.terms) != 1:
+        raise ValueError(
+            f"span_first applies to a single plain term clause (got {c!r})")
+    if c.first < 1:
+        raise ValueError(f"span_first end must be >= 1, got {c.first}")
+    return c.terms[0][0], int(c.first)
 
-    if live_pred is None:
-        live_pred = ((F.col("shard") >= shard_base) &
-                     (F.col("shard") < num_shards))
 
-    # bounded expansion for ALL distinct prefixes in ONE job (a union of
-    # per-prefix StringStartsWith branches, each limit-capped BEFORE the
-    # collect — the same no-per-pattern-jobs shape as
-    # _expand_multiterm_plans); the dictionary read also supplies each
-    # expansion's df for the synonym-style idf
+def _span_near_key(c):
+    if len(c.terms) != 2 or c.phrase or c.prefix:
+        raise ValueError(
+            f"span_near clause must carry exactly two plain terms (got {c!r})")
+    a, b = c.terms[0][0], c.terms[1][0]
+    if a == b:
+        raise ValueError(
+            f"span_near needs two distinct terms, got {a!r} twice")
+    return a, b, int(c.near), bool(c.near_not)
+
+
+def _interval_key(c):
+    if len(c.terms) < 2 or c.phrase or c.prefix:
+        raise ValueError(
+            f"interval clause must carry two or more plain terms (got {c!r})")
+    words, x, h = tuple(t for t, _ in c.terms), c.intv_not, c.intv_has
+    if x in words:
+        raise ValueError(
+            f"interval not_containing term {x!r} collides with a member")
+    if h is not None and h == x:
+        raise ValueError(
+            f"interval containing and not_containing both {x!r}")
+    return words, int(c.gaps), x, h
+
+
+def _phrase_prefix_key(c):
+    if c.phrase or c.prefix or c.fuzzy is not None or not c.terms:
+        raise ValueError(
+            f"phrase_prefix clause must carry plain fixed words (got {c!r})")
+    return tuple(t for t, _ in c.terms), c.pprefix
+
+
+def _expand_phrase_prefixes(spark, index_path, meta, keys):
+    """{prefix: [(term, df), ...]} for every distinct prefix, in ONE job: a
+    union of per-prefix StringStartsWith branches over the term-sorted
+    stats scan, each capped in term order at MAX_PHRASE_PREFIX_EXPANSIONS
+    BEFORE the collect — Lucene's setMaxExpansions truncates silently,
+    it does not throw. The dictionary read also supplies each
+    expansion's df for the synonym-style idf."""
+    from functools import reduce
+
     from .indexer import read_term_stats
-    stats = read_term_stats(spark, index_path, num_shards=num_shards,
-                            shard_base=shard_base)
-    branches = None
-    for pfx in sorted({p for _ws, p in specs}):
-        b = (stats.where(F.col("term").startswith(pfx))
-             .select(F.lit(pfx).alias("pfx"), "term", "df")
-             .orderBy("term").limit(max_expansions))
-        branches = b if branches is None else branches.unionByName(b)
-    expansions: dict[str, list[tuple[str, int]]] = \
-        {pfx: [] for _ws, pfx in specs}
-    for r in branches.collect():
-        expansions[r["pfx"]].append((r["term"], int(r["df"])))
-    for pfx in expansions:
-        expansions[pfx].sort()
-
-    pid_of = {key: i for i, key in enumerate(specs)}
-    pseudo_of_pid = {i: specs[k] for k, i in pid_of.items()}
-    memb_rows, n_fixed_of = [], {}
-    for (words, pfx), pid in pid_of.items():
-        n_fixed_of[pid] = len(words)
-        for off, w in enumerate(words):
-            memb_rows.append((pid, w, off, 0))
-        for t, _df in expansions[pfx]:
-            memb_rows.append((pid, t, len(words), 1))
-    all_words = sorted({w for _pid, w, _off, _x in memb_rows})
-
-    pos = (read_parquet(spark, f"{index_path}/positions")
-           .where(F.col("term").isin(all_words) & live_pred))
-    norms = (read_parquet(spark, f"{index_path}/norms")
-             .where(live_pred)
-             .select("shard", "docid", "dl"))
-    memb = spark.createDataFrame(
-        memb_rows, "pid int, word string, off int, is_exp int")
-    nf = spark.createDataFrame(
-        [(pid, n) for pid, n in n_fixed_of.items()], "pid int, n_fixed int")
-
-    joined = (pos.join(F.broadcast(memb), pos["term"] == memb["word"])
-              .select("pid", "shard", "docid", "is_exp",
-                      F.transform("positions", lambda x: x - F.col("off"))
-                      .alias("sp")))
-    grouped = (joined.groupBy("pid", "shard", "docid")
-               .agg(F.collect_list(F.struct("is_exp", "sp")).alias("items"))
-               .join(F.broadcast(nf), "pid"))
-    items = F.col("items")
-    fixed_arrs = F.transform(
-        F.filter(items, lambda s: s["is_exp"] == 0), lambda s: s["sp"])
-    exp_all = F.array_distinct(F.flatten(F.transform(
-        F.filter(items, lambda s: s["is_exp"] == 1), lambda s: s["sp"])))
-    # try_element_at: a doc holding only expansion rows has an EMPTY fixed
-    # array and codegen evaluates this projection before the n_fixed
-    # filter — the NULL seed folds to a NULL intersect, size() = -1, and
-    # the tf > 0 cut drops it (same rows the filter drops anyway)
-    fixed_fold = F.aggregate(fixed_arrs,
-                             F.try_element_at(fixed_arrs, F.lit(1)),
-                             lambda acc, a: F.array_intersect(acc, a))
-    tf_col = F.size(F.array_intersect(fixed_fold, exp_all))
-    # same localCheckpoint rationale as the phrase rewrite: one eager
-    # materialization feeds the stats collect AND the encode
-    tf_all = (grouped
-              .where(F.size(fixed_arrs) == F.col("n_fixed"))
-              .select("pid", "shard", "docid", tf_col.alias("tf"))
-              .where(F.col("tf") > 0)
-              .join(norms, ["shard", "docid"])
-              .localCheckpoint(eager=True))
-
-    stats_by_pid = {int(r["pid"]): (int(r["df"]), int(r["cf"]))
-                    for r in tf_all.groupBy("pid")
-                    .agg(F.count("*").alias("df"),
-                         F.sum("tf").alias("cf")).collect()}
-    live_pids = []
-    for (words, pfx), pid in pid_of.items():
-        st = stats_by_pid.get(pid)
-        if not st or st[0] == 0:
-            continue  # no completion anywhere: stays out of df_map, so
-            # MUST excludes everything and SHOULD contributes nothing
-        pseudo = pseudo_of_pid[pid]
-        df_map[pseudo] = st
-        # BM25: Σ fixed-word idfs + one synonym-style idf for the
-        # expansion set (df = max member df; see Clause.pprefix for the
-        # documented departure from Lucene's Σ-over-every-expansion)
-        idf = sum(
-            math.log(1.0 + (num_docs - df_map[w][0] + 0.5)
-                     / (df_map[w][0] + 0.5))
-            for w in words if w in df_map and df_map[w][0] > 0)
-        max_df = max((d for _t, d in expansions[pfx]), default=0)
-        if max_df > 0:
-            idf += math.log(1.0 + (num_docs - max_df + 0.5)
-                            / (max_df + 0.5))
-        idf_over[pseudo] = idf
-        live_pids.append(pid)
-    if not live_pids:
-        union = None
-    else:
-        base_kernel = _make_postings_kernel(block_size, docs_per_shard)
-
-        def encode(batches):
-            def add_dlq(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = pdf.assign(
-                    dlq=quantize_length(pdf["dl"].to_numpy()).astype("int32"))
-                return out[["shard", "term", "docid", "tf", "dlq"]]
-            yield from base_kernel(add_dlq(b) for b in batches if not b.empty)
-
-        name_df = spark.createDataFrame(
-            [(pid, pseudo_of_pid[pid]) for pid in live_pids],
-            "pid int, term string")
-        union = (tf_all.join(F.broadcast(name_df), "pid")
-                 .select("shard", "term", "docid",
-                         F.col("tf").cast("int"), "dl")
-                 .repartition(num_shards, "shard")
-                 .sortWithinPartitions("shard", "term", "docid")
-                 .mapInPandas(encode, schema=_PSCHEMA))
-
-    def swap(clauses):
-        cl = []
-        for c in clauses:
-            if c.group:
-                cl.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
-            elif getattr(c, "pprefix", None) is not None:
-                pseudo = specs[(tuple(t for t, _ in c.terms), c.pprefix)]
-                cl.append(Clause(c.occur, c.boost, [(pseudo, 1.0)]))
-            else:
-                cl.append(c)
-        return cl
-
-    new_plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    return new_plans, union
+    stats = read_term_stats(
+        spark, index_path, num_shards=int(meta["num_shards"]),
+        shard_base=int(meta.get("stats_base", meta.get("shard_base", 0))))
+    prefixes = sorted({pfx for _words, pfx in keys})
+    branches = [stats.where(F.col("term").startswith(pfx))
+                .select(F.lit(pfx).alias("pfx"), "term", "df")
+                .orderBy("term").limit(MAX_PHRASE_PREFIX_EXPANSIONS)
+                for pfx in prefixes]
+    out = {pfx: [] for pfx in prefixes}
+    for r in reduce(DataFrame.unionByName, branches).collect():
+        out[r["pfx"]].append((r["term"], int(r["df"])))
+    return {pfx: sorted(ts) for pfx, ts in out.items()}
 
 
-def _rewrite_spanfirst_plans(spark, index_path, plans, df_map, idf_over, *,
-                             num_docs, num_shards, docs_per_shard,
-                             block_size, shard_base=0, live_pred=None):
-    """Rewrite span-first clauses (Lucene SpanFirstQuery — Clause.first) to
-    pseudo-terms whose positional postings carry tf = the count of the
-    term's occurrences at token positions < end. ONE Spark job for all
-    (term, end) specs in the batch, the same shape as the phrase rewrite:
-    the positions read (term-predicate-pushed, live-shard-gated) joins a
-    broadcast spec table, the qualifying-occurrence count is one Catalyst
-    ``size(filter(positions, p < end))`` per row (positions are 0-based),
-    stats come back in one collect, and all pseudo postings encode through
-    the SAME blocked varbyte kernel — the scorer needs no span path.
+@dataclass(frozen=True, eq=False)
+class _PseudoKind:
+    """One positional clause kind of :func:`_rewrite_pseudo_terms` (its
+    docstring states the contract every field follows)."""
+    name: str
+    match: Callable
+    key: Callable
+    pseudo: Callable
+    members: Callable
+    params: Callable
+    tf: Callable
+    idf_dfs: Callable
+    expand: Callable | None = None
 
-    Scoring follows the engine's phrase convention: under BM25 the pseudo
-    scores with the WRAPPED TERM's idf via ``idf_over`` (Lucene SpanWeight
-    builds its SimWeight from the underlying term states, so df is the
-    term's full df, not the span df); under QLD the pseudo's own (df, cf)
-    feed LMDirichlet. A spec matching nothing stays out of df_map, so a
-    MUST clause correctly excludes everything."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-    from ..functions.smallfloat import quantize_length
 
-    specs: dict[tuple[str, int], str] = {}
+def _dfs(df_of, words):
+    return [df_of(w) for w in words]
+
+
+_PSEUDO_KINDS = (
+    # phrase '"a b"' — Lucene PhraseQuery: tf = phrase frequency, idf =
+    # Σ member idfs. Sloppy '"a b"~N' is ordered anchored-greedy proximity
+    # (queryparse.Clause.slop) with the same idf. Without the positions
+    # sidecar phrases stay bag-of-words, like the reference's index
+    _PseudoKind(
+        "phrase",
+        match=lambda c: c.phrase and len(c.terms) > 1,
+        key=lambda c: (tuple(t for t, _ in c.terms), c.slop),
+        pseudo=lambda k: _phrase_pseudo_term(list(k[0]), k[1]),
+        members=lambda k, _x: [(w, off) for off, w in enumerate(k[0])],
+        params=lambda k: {"nw": len(k[0]), "slop": k[1]},
+        tf=_phrase_tf,
+        idf_dfs=lambda k, df_of, _x: _dfs(df_of, k[0])),
+    # span_first — Lucene SpanFirstQuery: tf = occurrences at 0-based
+    # positions < end; idf = the wrapped term's full-df idf (SpanWeight
+    # builds its SimWeight from the underlying term states)
+    _PseudoKind(
+        "span_first",
+        match=lambda c: c.first is not None,
+        key=_span_first_key,
+        pseudo=lambda k: f"\x01first:{k[1]}:{k[0]}",
+        members=lambda k, _x: [(k[0], 0)],
+        params=lambda k: {"fend": k[1]},
+        tf=_span_first_tf,
+        idf_dfs=lambda k, df_of, _x: [df_of(k[0])]),
+    # span_near — Lucene SpanNearQuery(inOrder=false) with the anchored
+    # counting departure at queryparse.Clause.near: idf = Σ both idfs.
+    # span_not (Clause.near_not) — SpanNotQuery: the exclusion shapes tf
+    # only, idf = the INCLUDE term's idf alone
+    _PseudoKind(
+        "span_near",
+        match=lambda c: c.near is not None,
+        key=_span_near_key,
+        pseudo=lambda k: (f"\x01{'nearnot' if k[3] else 'near'}:{k[2]}:"
+                          f"{k[0]}\x01{k[1]}"),
+        members=lambda k, _x: [(k[0], 0), (k[1], 1)],
+        params=lambda k: {"slop": k[2], "inv": int(k[3])},
+        tf=_span_near_tf,
+        idf_dfs=lambda k, df_of, _x: _dfs(df_of, k[:1] if k[3] else k[:2])),
+    # interval — Lucene IntervalQuery, Intervals.maxgaps(g, ordered(...))
+    # with optional notContaining / containing (queryparse.Clause.gaps):
+    # tf = minimal intervals; idf = Σ ordered members' idfs, repeats
+    # counted per occurrence; the filter terms never weigh
+    _PseudoKind(
+        "interval",
+        match=lambda c: c.gaps is not None,
+        key=_interval_key,
+        pseudo=lambda k: (f"\x01intv:{k[1]}:" + "\x01".join(k[0])
+                          + f"\x01!{k[2] or ''}\x01+{k[3] or ''}"),
+        members=lambda k, _x: (
+            [(w, j) for j, w in enumerate(k[0])]
+            + ([(k[2], -2)] if k[2] is not None else [])
+            + ([(k[3], -3)] if k[3] is not None else [])),
+        params=lambda k: {"nw": len(k[0]), "gaps": k[1],
+                          "need": int(k[3] is not None)},
+        tf=_interval_tf,
+        idf_dfs=lambda k, df_of, _x: _dfs(df_of, k[0])),
+    # phrase_prefix — ES match_phrase_prefix (queryparse.Clause.pprefix):
+    # idf = Σ fixed-word idfs + ONE SynonymQuery-style idf for the
+    # expansion set (df = max member df), the documented departure from
+    # Lucene MultiPhraseQuery's Σ over every expansion
+    _PseudoKind(
+        "phrase_prefix",
+        match=lambda c: c.pprefix is not None,
+        key=_phrase_prefix_key,
+        pseudo=lambda k: "\x01pp:" + "\x01".join(k[0]) + "\x01*" + k[1],
+        members=lambda k, x: ([(w, off) for off, w in enumerate(k[0])]
+                              + [(t, len(k[0])) for t, _df in x[k[1]]]),
+        params=lambda k: {"nw": len(k[0])},
+        tf=_phrase_prefix_tf,
+        idf_dfs=lambda k, df_of, x: _dfs(df_of, k[0]) + [
+            max((df for _t, df in x[k[1]]), default=0)],
+        expand=_expand_phrase_prefixes),
+)
+
+
+def _pseudo_kind_enabled(kind, meta, scorer, stats_override) -> bool:
+    """Refuse a batch holding ``kind`` clauses that cannot be scored;
+    False leaves them literal (phrases on a positionless index)."""
+    if not meta.get("positions"):
+        if kind.name == "phrase":
+            return False
+        raise ValueError(
+            f"{kind.name} clauses need the positions sidecar: rebuild "
+            "with IndexConfig(positions=True)")
+    if scorer not in ("bm25", "qld"):
+        # qljm / classic / ... phrases degrading to bag-of-words while
+        # positions EXIST would be a silent wrong answer
+        what = ("positional phrases are" if kind.name == "phrase"
+                else f"{kind.name} is")
+        raise ValueError(f"{what} not implemented for scorer {scorer!r} "
+                         "(bm25/qld only)")
+    if stats_override is not None and kind.name == "phrase_prefix":
+        raise ValueError(
+            "stats_override cannot score phrase_prefix clauses: the "
+            "expansion and the pseudo-term's stats are per-index")
+    if stats_override is not None and scorer == "qld":
+        # bm25 is federation-safe (idf from the GLOBAL member dfs via
+        # idf_over); qld scores the pseudo-term's per-index cf
+        what = ("phrases: the phrase" if kind.name == "phrase"
+                else f"{kind.name} clauses: the")
+        raise ValueError(f"stats_override cannot score qld {what} "
+                         "pseudo-term's collection frequency is per-index")
+    return True
+
+
+def _encode_pseudo(rows, meta):
+    """(term, shard, docid, tf, dl | dlq) rows of pseudo-terms → postings
+    rows, through the SAME blocked varbyte kernel as regular postings —
+    the scorer needs no pseudo-term path."""
+    from .indexer import POSTINGS_SCHEMA, _make_postings_kernel
+
+    kernel = _make_postings_kernel(int(meta.get("block_size", 128)),
+                                   int(meta["docs_per_shard"]))
+    length = "dlq" if "dlq" in rows.columns else "dl"
+
+    def encode(batches):
+        if length == "dl":  # quantize raw lengths the way the indexer does
+            batches = (b.assign(dlq=quantize_length(
+                b.pop("dl").to_numpy()).astype("int32"))
+                for b in batches if not b.empty)
+        yield from kernel(batches)
+
+    return (rows.select("shard", "term", "docid", F.col("tf").cast("int"),
+                        F.col(length).cast("int"))
+            .repartition(int(meta["num_shards"]), "shard")
+            .sortWithinPartitions("shard", "term", "docid")
+            .mapInPandas(encode, schema=POSTINGS_SCHEMA))
+
+
+def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
+                          df_map, idf_over, *, meta, live_pred, deleted,
+                          num_docs):
+    """Rewrite every positional clause (``kinds``, enabled entries of
+    _PSEUDO_KINDS) and every synonym group to ONE pseudo-term with its own
+    postings; returns (new plans, the pseudo postings or None).
+
+    Each kind supplies only what differs between kinds:
+
+    - ``match(c)``: whether a leaf clause is of this kind; ``key(c)``
+      validates it (ValueError) and returns its spec key — clauses with
+      equal keys share one pseudo-term, ``pseudo(key)`` its name;
+    - ``members(key, expansions)``: (word, role) rows of the membership
+      table; ``params(key)``: the spec's int parameters by column name;
+    - ``tf(items)``: a Catalyst Column over the doc's grouped
+      ``array<struct<role, positions>>`` (one item per member row the doc
+      holds) and the params columns; NULL or ≤ 0 means no match;
+    - ``idf_dfs(key, df_of, expansions)``: the dfs whose BM25 idfs sum to
+      the pseudo-term's idf (``idf_over``; QLD scores the pseudo-term's
+      own (df, cf) instead);
+    - ``expand`` (phrase_prefix only): a bounded dictionary collect run
+      first, whose result ``members`` and ``idf_dfs`` read.
+
+    Everything else runs once per search, however many kinds the batch
+    mixes: one positions read (term-predicate-pushed, live-shard-gated)
+    joined to one broadcast membership table, one groupBy keyed
+    (pseudo-term, shard, docid) — a head term's rows per shard stay bounded by
+    docs_per_shard — one eager localCheckpoint feeding both the stats
+    collect and the encode (a bare persist would leak one cached frame per
+    search for the session), one stats collect, one encode. A spec that
+    matches nothing stays out of df_map, so a MUST clause excludes
+    everything and a SHOULD clause contributes nothing.
+
+    Synonym groups (Lucene SynonymQuery: tf = Σ member tfs, df = max
+    member df, cf = Σ member cf — the members score as ONE term) need no
+    positions: their tfs come from the members' decoded postings under
+    the search's own snapshot (``meta``, ``deleted``), their stats from
+    df_map — so they also work under a federation stats_override — and
+    they share the encode and the swap. Synonyms only replace bare terms,
+    never phrase members. A pseudo-term of a single-term clause keeps the
+    term's weight."""
+    from .queryparse import Clause
+
+    def kind_of(c):
+        return next((k for k in kinds if k.match(c)), None)
+
+    specs: dict[tuple, str] = {}  # (kind, key) → pseudo-term
     for p in plans:
         for c in iter_term_clauses(p.clauses):
-            end = getattr(c, "first", None)
-            if end is None:
-                continue
-            if c.phrase or c.prefix or c.fuzzy is not None \
-                    or getattr(c, "trange", None) is not None \
-                    or getattr(c, "wild", None) is not None \
-                    or getattr(c, "regex", None) is not None \
-                    or len(c.terms) != 1:
-                raise ValueError(
-                    "span_first applies to a single plain term clause "
-                    f"(got {c!r})")
-            if end < 1:
-                raise ValueError(f"span_first end must be >= 1, got {end}")
-            term = c.terms[0][0]
-            specs.setdefault((term, int(end)),
-                             _spanfirst_pseudo_term(term, int(end)))
-    if not specs:
-        return plans, None
+            k = kind_of(c)
+            if k is not None:
+                key = k.key(c)
+                specs.setdefault((k, key), k.pseudo(key))
+    parts = []
 
-    if live_pred is None:
-        live_pred = ((F.col("shard") >= shard_base) &
-                     (F.col("shard") < num_shards))
-    words = sorted({t for t, _e in specs})
-    pos = (read_parquet(spark, f"{index_path}/positions")
-           .where(F.col("term").isin(words) & live_pred))
-    norms = (read_parquet(spark, f"{index_path}/norms")
-             .where(live_pred)
-             .select("shard", "docid", "dl"))
-    sid_of = {key: i for i, key in enumerate(sorted(specs))}
-    spec_df = spark.createDataFrame(
-        [(sid, t, e) for (t, e), sid in sid_of.items()],
-        "sid int, word string, fend int")
+    if specs:
+        present = [k for k in kinds if any(kk is k for kk, _key in specs)]
+        ext = {k: k.expand(spark, index_path, meta,
+                           [key for kk, key in specs if kk is k])
+               for k in present if k.expand is not None}
+        # one membership row per (pseudo-term, member word, role) carrying
+        # the spec's kind and params: constant per pseudo-term, so grouping
+        # by them too splits nothing (a second broadcast table would cost
+        # a job)
+        cols = sorted({c for k, key in specs for c in k.params(key)})
+        memb = [(name, w, role, k.name, *(k.params(key).get(c) for c in cols))
+                for (k, key), name in specs.items()
+                for w, role in k.members(key, ext.get(k))]
+        memb_df = spark.createDataFrame(memb, ", ".join(
+            ["term string", "word string", "role int", "kind string"]
+            + [f"{c} int" for c in cols]))
+        pos = (read_parquet(spark, f"{index_path}/positions")
+               .where(F.col("term").isin(sorted({m[1] for m in memb}))
+                      & live_pred)
+               .withColumnRenamed("term", "word"))
+        norms = (read_parquet(spark, f"{index_path}/norms")
+                 .where(live_pred).select("shard", "docid", "dl"))
+        branches = [(F.col("kind") == k.name, k.tf(F.col("items")))
+                    for k in present]
+        tf = F.when(*branches[0])
+        for cond, value in branches[1:]:
+            tf = tf.when(cond, value)
+        tf_all = (pos.join(F.broadcast(memb_df), "word")
+                  .groupBy("term", "shard", "docid", "kind", *cols)
+                  .agg(F.collect_list(F.struct("role", "positions"))
+                       .alias("items"))
+                  .select("term", "shard", "docid", tf.alias("tf"))
+                  .where(F.col("tf") > 0)
+                  .join(norms, ["shard", "docid"])
+                  .localCheckpoint(eager=True))
+        stats = {r["term"]: (int(r["df"]), int(r["cf"]))
+                 for r in tf_all.groupBy("term")
+                 .agg(F.count("*").alias("df"),
+                      F.sum("tf").alias("cf")).collect()}
 
-    tf_col = F.size(F.filter("positions", lambda x: x < F.col("fend")))
-    # one eager materialization feeds both the stats collect and the encode
-    # (same localCheckpoint rationale as the phrase rewrite: a bare persist
-    # would leak one cached frame per span-first search for the session)
-    tf_all = (pos.join(F.broadcast(spec_df), pos["term"] == spec_df["word"])
-              .select("sid", "shard", "docid", tf_col.alias("tf"))
-              .where(F.col("tf") > 0)
-              .join(norms, ["shard", "docid"])
-              .localCheckpoint(eager=True))
+        def df_of(w):
+            return df_map.get(w, (0, 0))[0]
 
-    stats = {int(r["sid"]): (int(r["df"]), int(r["cf"]))
-             for r in tf_all.groupBy("sid")
-                            .agg(F.count("*").alias("df"),
-                                 F.sum("tf").alias("cf")).collect()}
-    live_sids = []
-    for (term, end), sid in sid_of.items():
-        st = stats.get(sid)
-        if not st or st[0] == 0:
-            continue  # no qualifying occurrence anywhere: stays out of df_map
-        pseudo = specs[(term, end)]
-        df_map[pseudo] = st
-        if term in df_map and df_map[term][0] > 0:
-            idf_over[pseudo] = math.log(
-                1.0 + (num_docs - df_map[term][0] + 0.5)
-                / (df_map[term][0] + 0.5))
-        live_sids.append(sid)
+        for (k, key), name in specs.items():
+            if name in stats:
+                df_map[name] = stats[name]
+                idf_over[name] = sum(
+                    _bm25_idf(num_docs, df)
+                    for df in k.idf_dfs(key, df_of, ext.get(k)) if df > 0)
+        if stats:
+            parts.append(_encode_pseudo(tf_all, meta))
 
-    if not live_sids:
-        union = None
-    else:
-        base_kernel = _make_postings_kernel(block_size, docs_per_shard)
+    syn_name = {}
+    for g in sorted(set(syn_groups.values())):
+        member_stats = [df_map[w] for w in g if df_map.get(w, (0, 0))[0] > 0]
+        if member_stats:  # no member indexed: the literal stays
+            syn_name[g] = _synonym_pseudo_term(g)
+            df_map[syn_name[g]] = (max(s[0] for s in member_stats),
+                                   sum(s[1] for s in member_stats))
+    if syn_name:
+        from .bm25f import term_postings_frame
+        memb_df = spark.createDataFrame(
+            [(name, w) for g, name in syn_name.items() for w in g],
+            "term string, word string")
+        summed = (term_postings_frame(spark, index_path,
+                                      {w for g in syn_name for w in g},
+                                      meta=meta, deleted=deleted)
+                  .withColumnRenamed("term", "word")
+                  .join(F.broadcast(memb_df), "word")
+                  .withColumn("shard", (F.col("docid") / F.lit(
+                      int(meta["docs_per_shard"]))).cast("int"))
+                  .groupBy("term", "shard", "docid")
+                  .agg(F.sum("tf").alias("tf"), F.max("dlq").alias("dlq")))
+        parts.append(_encode_pseudo(summed, meta))
 
-        def encode(batches):
-            def add_dlq(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = pdf.assign(
-                    dlq=quantize_length(pdf["dl"].to_numpy()).astype("int32"))
-                return out[["shard", "term", "docid", "tf", "dlq"]]
-            yield from base_kernel(add_dlq(b) for b in batches if not b.empty)
-
-        name_df = spark.createDataFrame(
-            [(sid, specs[key]) for key, sid in sid_of.items()
-             if sid in set(live_sids)],
-            "sid int, term string")
-        union = (tf_all.join(F.broadcast(name_df), "sid")
-                 .select("shard", "term", "docid",
-                         F.col("tf").cast("int"), "dl")
-                 .repartition(num_shards, "shard")
-                 .sortWithinPartitions("shard", "term", "docid")
-                 .mapInPandas(encode, schema=_PSCHEMA))
+    def pseudo_of(c):
+        k = kind_of(c)
+        if k is not None:
+            return specs[(k, k.key(c))]
+        if not c.phrase and len(c.terms) == 1:
+            return syn_name.get(syn_groups.get(c.terms[0][0]))
+        return None
 
     def swap(clauses):
-        cl = []
+        out = []
         for c in clauses:
+            name = None if c.group else pseudo_of(c)
             if c.group:
-                cl.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
-            elif getattr(c, "first", None) is not None:
-                pseudo = specs[(c.terms[0][0], int(c.first))]
-                cl.append(Clause(c.occur, c.boost,
-                                 [(pseudo, c.terms[0][1])]))
+                out.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
+            elif name is None:
+                out.append(c)
             else:
-                cl.append(c)
-        return cl
+                weight = c.terms[0][1] if len(c.terms) == 1 else 1.0
+                out.append(Clause(c.occur, c.boost, [(name, weight)]))
+        return out
 
-    new_plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    return new_plans, union
-
-
-def _rewrite_phrase_plans(spark, index_path, plans, df_map, idf_over, *,
-                          num_docs, num_shards, docs_per_shard, block_size,
-                          shard_base=0, live_pred=None):
-    """Rewrite phrase clauses to pseudo-terms backed by positional postings
-    — ONE Spark job for ALL phrases, however many the batch contains.
-
-    Every distinct phrase's members become rows of a tiny broadcast
-    membership table (pid, word, offset, n_words); the positions read (term-
-    predicate-pushed, shard-pruned) joins it once, each row's position list
-    is shifted by its member offset JVM-side, and a single groupBy
-    (pid, shard, docid) folds the member lists with array_intersect — the
-    intersection size is the exact phrase frequency (a doc must supply all
-    n_words member rows to survive). All phrases' (df, cf) stats come back
-    in ONE collect; all pseudo-term postings are encoded through the SAME
-    blocked varbyte kernel as regular postings in ONE repartition+kernel
-    pass, so the scorer needs no phrase-specific path and the postings frame
-    gains exactly one union branch regardless of phrase count. (The round-2
-    shape — a driver loop with a per-phrase .first() plus a per-phrase union
-    branch — was O(#phrases) sequential jobs; a thousand-phrase topic batch
-    would have crawled.)
-
-    Scoring matches Lucene's PhraseQuery under BM25: tf = phrase frequency,
-    idf = Σ member idfs (BM25Similarity.idfExplain over the phrase terms) —
-    carried via ``idf_over``; under QLD the pseudo-term scores through the
-    standard LMDirichlet formula with its own (df, cf) from df_map. A phrase
-    with zero matches (or an unindexed member) stays out of df_map, so MUST
-    clauses correctly exclude everything.
-
-    Scale shape: the groupBy keys on (pid, shard, docid) — a head term's
-    rows per shard stay bounded by docs_per_shard (the shard is the salt),
-    and phrase candidates only exist for docs containing a member word."""
-    from .indexer import POSTINGS_SCHEMA as _PSCHEMA, _make_postings_kernel
-    from .queryparse import Clause, QueryPlan
-
-    # keyed by (words, slop): "a b" and "a b"~3 are distinct pseudo-terms
-    phrases: dict[tuple[tuple[str, ...], int], str] = {}
-    for p in plans:
-        for c in iter_term_clauses(p.clauses):
-            if c.phrase and len(c.terms) > 1:
-                key = (tuple(t for t, _ in c.terms), getattr(c, "slop", 0))
-                phrases.setdefault(
-                    key, _phrase_pseudo_term(list(key[0]), key[1]))
-    pid_of = {key: i for i, key in enumerate(phrases)}
-    pseudo_of_pid = {i: phrases[k] for k, i in pid_of.items()}
-
-    pos_path = f"{index_path}/positions"
-    all_words = sorted({w for ws, _s in phrases for w in ws})
-    if live_pred is None:
-        live_pred = ((F.col("shard") >= shard_base) &
-                     (F.col("shard") < num_shards))
-    pos = (read_parquet(spark, pos_path)
-           .where(F.col("term").isin(all_words) & live_pred))
-    norms = (read_parquet(spark, f"{index_path}/norms")
-             .where(live_pred)
-             .select("shard", "docid", "dl"))
-
-    memb = spark.createDataFrame(
-        [(pid, w, off, len(ws), slop)
-         for (ws, slop), pid in pid_of.items()
-         for off, w in enumerate(ws)],
-        "pid int, word string, off int, n_words int, slop int")
-
-    joined = (pos.join(F.broadcast(memb), pos["term"] == memb["word"])
-              .select("pid", "shard", "docid", "off", "n_words", "slop",
-                      "positions"))
-    tf_parts = []
-
-    if any(s == 0 for _ws, s in pid_of):
-        # exact phrases: shift each member's positions by its offset; the
-        # intersection size of the shifted arrays = phrase frequency
-        shifted = (joined.where(F.col("slop") == 0)
-                   .select("pid", "shard", "docid", "n_words",
-                           F.transform("positions",
-                                       lambda x: x - F.col("off"))
-                           .alias("sp")))
-        arrs = F.col("arrs")
-        inter = F.aggregate(arrs, F.element_at(arrs, 1),
-                            lambda acc, a: F.array_intersect(acc, a))
-        tf_parts.append(
-            (shifted.groupBy("pid", "shard", "docid")
-             .agg(F.count("*").alias("nm"), F.max("n_words").alias("nw"),
-                  F.collect_list("sp").alias("arrs"))
-             .where(F.col("nm") == F.col("nw"))
-             .select("pid", "shard", "docid", F.size(inter).alias("tf"))))
-
-    if any(s > 0 for _ws, s in pid_of):
-        # sloppy phrases ('"a b"~N'): ordered anchored-greedy proximity
-        # (see queryparse.Clause.slop for semantics + Lucene departures).
-        # Folded entirely in Catalyst: sort member arrays by phrase offset,
-        # seed per-anchor (start, cur) structs from the first word's
-        # positions, then aggregate() over the remaining arrays advancing
-        # each anchor to the EARLIEST position after its current link —
-        # a dead anchor's cur goes NULL and stays NULL (filter over a NULL
-        # bound is empty, array_min(empty) is NULL). tf = anchors whose
-        # final width excess ≤ slop. Like the exact path this is one
-        # groupBy keyed (pid, shard, docid), shard-salted by construction.
-        grouped = (joined.where(F.col("slop") > 0)
-                   .groupBy("pid", "shard", "docid")
-                   .agg(F.count("*").alias("nm"),
-                        F.max("n_words").alias("nw"),
-                        F.max("slop").alias("slop"),
-                        F.array_sort(F.collect_list(
-                            F.struct("off", "positions"))).alias("offarrs"))
-                   .where(F.col("nm") == F.col("nw")))
-        parrs = F.transform("offarrs", lambda x: x["positions"])
-        init = F.transform(F.element_at(parrs, 1),
-                           lambda p: F.struct(p.alias("start"),
-                                              p.alias("cur")))
-        chained = F.aggregate(
-            F.slice(parrs, F.lit(2), F.size(parrs) - 1), init,
-            lambda acc, nxt: F.transform(
-                acc,
-                lambda s: F.struct(
-                    s["start"].alias("start"),
-                    F.array_min(F.filter(nxt, lambda x: x > s["cur"]))
-                    .alias("cur"))))
-        tf_sloppy = F.size(F.filter(
-            chained,
-            lambda s: s["cur"].isNotNull()
-            & ((s["cur"] - s["start"] - (F.col("nw") - 1))
-               <= F.col("slop"))))
-        tf_parts.append(grouped.select("pid", "shard", "docid",
-                                       tf_sloppy.alias("tf")))
-
-    tf_union = tf_parts[0]
-    for part in tf_parts[1:]:
-        tf_union = tf_union.unionByName(part)
-    # materialized ONCE as an eager localCheckpoint (we must execute it
-    # anyway for the stats collect below): feeds both the stats and the
-    # pseudo-term encode without recompute, and its blocks are GC-released
-    # with the plan — a bare persist() here would leak one cached frame per
-    # phrase-bearing search() for the session lifetime (a long-lived query
-    # service or a warm bench loop fills executor storage memory)
-    tf_all = (tf_union
-              .where(F.col("tf") > 0)
-              .join(norms, ["shard", "docid"])
-              .localCheckpoint(eager=True))
-
-    # ALL phrases' stats in one job
-    stats = {int(r["pid"]): (int(r["df"]), int(r["cf"]))
-             for r in tf_all.groupBy("pid")
-                            .agg(F.count("*").alias("df"),
-                                 F.sum("tf").alias("cf")).collect()}
-    live_pids = []
-    for (words, _slop), pid in pid_of.items():
-        st = stats.get(pid)
-        if not st or st[0] == 0:
-            continue  # phrase matches nothing: pseudo stays out of df_map
-        pseudo = pseudo_of_pid[pid]
-        df_map[pseudo] = st
-        idf_over[pseudo] = sum(
-            math.log(1.0 + (num_docs - df_map[w][0] + 0.5) / (df_map[w][0] + 0.5))
-            for w in words if w in df_map and df_map[w][0] > 0)
-        live_pids.append(pid)
-    if not live_pids:
-        union = None
-    else:
-        base_kernel = _make_postings_kernel(block_size, docs_per_shard)
-
-        def encode(batches):
-            def add_dlq(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = pdf.assign(
-                    dlq=quantize_length(pdf["dl"].to_numpy()).astype("int32"))
-                return out[["shard", "term", "docid", "tf", "dlq"]]
-            yield from base_kernel(add_dlq(b) for b in batches if not b.empty)
-
-        name_df = spark.createDataFrame(
-            [(pid, pseudo_of_pid[pid]) for pid in live_pids],
-            "pid int, term string")
-        union = (tf_all.join(F.broadcast(name_df), "pid")
-                 .select("shard", "term", "docid",
-                         F.col("tf").cast("int"), "dl")
-                 .repartition(num_shards, "shard")
-                 .sortWithinPartitions("shard", "term", "docid")
-                 .mapInPandas(encode, schema=_PSCHEMA))
-
-    # swap phrase clauses for their pseudo-term, descending through nested
-    # groups (new plan objects — the caller's plans are not mutated)
-    def swap(clauses):
-        cl = []
-        for c in clauses:
-            if c.group:
-                cl.append(Clause(c.occur, c.boost, [], group=swap(c.group)))
-            elif c.phrase and len(c.terms) > 1:
-                pseudo = phrases[(tuple(t for t, _ in c.terms),
-                                  getattr(c, "slop", 0))]
-                cl.append(Clause(c.occur, c.boost, [(pseudo, 1.0)]))
-            else:
-                cl.append(c)
-        return cl
-
-    new_plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    return new_plans, union
+    plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
+    posts = None
+    for part in parts:
+        posts = part if posts is None else posts.unionByName(part)
+    return plans, posts
 
 
 def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
@@ -2618,7 +2001,7 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
                     if len(terms) == 1 and terms[0][0] in idf_over:
                         idf = idf_over[terms[0][0]]  # phrase: Σ member idfs
                     else:
-                        idf = math.log(1.0 + (num_docs - edf + 0.5) / (edf + 0.5))
+                        idf = _bm25_idf(num_docs, edf)
                     total[mask] += boost * idf * etf[mask] / (etf[mask] + K[mask])
                 elif scorer == "qld":  # LMDirichlet, +1-smoothed p(t|C)
                     p_c = (ecf + 1.0) / (total_tf + 1.0)
@@ -2859,7 +2242,7 @@ class _BlockMaxPruner:
                 continue
             idf = idf_over.get(term)
             if idf is None:
-                idf = math.log(1.0 + (self.num_docs - stat[0] + 0.5) / (stat[0] + 0.5))
+                idf = _bm25_idf(self.num_docs, stat[0])
             alive.append((h, w, idf))
         if not alive:
             return np.zeros(0, dtype=np.int64), np.zeros(0)
@@ -3066,9 +2449,6 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
                     phrase_tf[(lb, docid)] = (
                         len(set.intersection(*sets)) if all(sets) else 0)
 
-    def idf_of(df):
-        return math.log(1.0 + (num_docs - df + 0.5) / (df + 0.5))
-
     def eval_doc(clauses, docid, ext_id, dl, dlq, kpart, prefix, scale):
         """Mirror of the scorer kernel for ONE doc: returns (rows, total,
         matched). A nested group's leaf rows are emitted only if the group
@@ -3103,7 +2483,7 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
                 crows = []
                 if tf > 0:
                     words = [t for t, _ in c.terms]
-                    idf_sum = sum(idf_of(stats[w]) for w in words
+                    idf_sum = sum(_bm25_idf(num_docs, stats[w]) for w in words
                                   if stats.get(w, 0) > 0)
                     clause_total = c.boost * idf_sum * tf / (tf + kpart)
                     ptxt = '"' + " ".join(words) + '"'
@@ -3122,7 +2502,7 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
                 clause_total = 0.0
                 crows = []
                 if etf > 0 and edf > 0:
-                    idf = idf_of(edf)
+                    idf = _bm25_idf(num_docs, edf)
                     clause_total = c.boost * idf * etf / (etf + kpart)
                     name = "(" + " ".join(f"{t}^{p:g}" for t, p in c.terms) + ")"
                     crows = [(plan.qid, ext_id, label, name, int(round(etf)),
@@ -3143,7 +2523,7 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
                 clause_total = 0.0
                 crows = []
                 if df_t > 0 and tf > 0:
-                    idf = idf_of(edf)
+                    idf = _bm25_idf(num_docs, edf)
                     clause_total = c.boost * idf * etf / (etf + kpart)
                     name = term if p == 1.0 else f"{term}^{p:g}"
                     crows = [(plan.qid, ext_id, label, name, int(round(etf)),

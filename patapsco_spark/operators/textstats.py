@@ -888,15 +888,15 @@ def pmi_collocations(docs: DataFrame, k: int = 100, min_count: int = 5,
     docs = _widen(docs)
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    toks_arr = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                        lambda t: t != "")
+    toks_arr = _TOKENS(text_col)
     words = docs.select(F.explode(toks_arr).alias("w"))
     uni = words.groupBy("w").agg(F.count("*").alias("c"))
     # the two scalar totals are pure size arithmetic — ONE explode-free
     # scan instead of two full explode-and-count passes (the token and
     # pair COUNTS per doc are size(toks) and max(size-1, 0) by
-    # construction of _adjacent_pairs; null texts contribute nothing on
-    # either path: explode of NULL yields no rows, sum skips NULLs)
+    # construction of _adjacent_pairs; _TOKENS reads a NULL text as '',
+    # so it counts zero tokens under any ANSI setting — a bare size(NULL)
+    # is -1 when ANSI mode is off)
     totals = docs.agg(
         F.sum(F.size(toks_arr)).alias("nt"),
         F.sum(F.greatest(F.size(toks_arr) - 1, F.lit(0))).alias("np")

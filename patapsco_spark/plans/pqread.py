@@ -102,7 +102,9 @@ def _partition_type(root: str, depth: int, name: str) -> T.DataType | None:
                     vals.append(e.name.split("=", 1)[1])
         except OSError:
             return None
-    if not vals:
+    if not vals or "__HIVE_DEFAULT_PARTITION__" in vals:
+        # the NULL-value marker: Spark types the level from the other
+        # values and reads the marker as NULL — leave that to it
         return None
     if all(_INT_RE.match(v) for v in vals):
         lo, hi = min(int(v) for v in vals), max(int(v) for v in vals)

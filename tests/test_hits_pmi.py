@@ -76,3 +76,24 @@ def test_pmi_validation(spark):
     empty = spark.createDataFrame([("1", "solo")],
                                   "doc_id string, text string")
     assert pmi_collocations(empty, min_count=1).count() == 0
+
+
+def test_pmi_null_text_counts_zero_tokens_without_ansi(spark):
+    # size(NULL) is -1 when ANSI mode is off: a NULL text must still count
+    # zero tokens, so the PMI values equal those of the corpus without it
+    texts = ["the big apple is the big apple", "big apple pie", "the the the"]
+    base = spark.createDataFrame([(str(i), t) for i, t in enumerate(texts)],
+                                 "doc_id string, text string")
+    with_null = base.unionByName(
+        spark.createDataFrame([("n", None)], "doc_id string, text string"))
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = {(r["w1"], r["w2"]): r["pmi"]
+               for r in pmi_collocations(with_null, k=10,
+                                         min_count=2).collect()}
+        want = {(r["w1"], r["w2"]): r["pmi"]
+                for r in pmi_collocations(base, k=10, min_count=2).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert got == want and got

@@ -61,6 +61,27 @@ def test_pit_stale_after_compaction(spark, idx):
     assert {d for d, _ in _hits(spark, idx, pit=open_pit(idx))} >= {"p1"}
 
 
+def test_pit_synonyms_read_the_pinned_tombstones(spark, idx):
+    # synonym pseudo postings must come from the PIT's snapshot: a delete
+    # committed after open_pit is invisible to the pinned scorer, so it
+    # must not mask the doc's synonym postings either
+    from patapsco_spark.operators.deletes import delete_docs
+
+    def hits(pit=None):
+        res = search_texts(spark, idx, [("q", "alpha pad")],
+                           RetrieveConfig(k=10), text_cfg=RAW, pit=pit,
+                           synonyms={"alpha": ["beta"]})
+        return [(r["doc_id"], r["score"]) for r in res.collect()]
+
+    pit = open_pit(idx)
+    before = hits(pit)
+    assert "p1" in {d for d, _ in before}
+    delete_docs(spark, idx, ["p1"])
+    assert hits(pit) == before
+    # an unpinned search sees the delete
+    assert "p1" not in {d for d, _ in hits()}
+
+
 def test_live_ranges_interval_arithmetic():
     assert _live_ranges({"num_shards": 4}) == [(0, 4)]
     assert _live_ranges({"shard_base": 2, "num_shards": 6}) == [(2, 6)]

@@ -73,12 +73,54 @@ def pos_idx(spark, tmp_path_factory):
     return path
 
 
+def _mixed_plans():
+    """One plan per positional clause kind over pos_idx's documents, each
+    matching some docs: phrase, sloppy phrase, span_near, span_not,
+    span_first, interval and phrase_prefix."""
+    from patapsco_spark.operators.queryparse import (interval_plan,
+                                                     parse_query,
+                                                     phrase_prefix_plan,
+                                                     span_first_plan,
+                                                     span_near_plan,
+                                                     span_not_plan)
+    return [parse_query("phrase", '"alpha beta" delta', "boolean"),
+            parse_query("sloppy", '"alpha gamma"~2', "boolean"),
+            span_near_plan("span_near", [("alpha", "delta", 3)]),
+            span_not_plan("span_not", [("beta", "alpha", 0)]),
+            span_first_plan("span_first", [("gamma", 3)]),
+            interval_plan("interval", [("alpha", "delta", 2)]),
+            phrase_prefix_plan("phrase_prefix", ["delta"], "term")]
+
+
+def test_mixed_kind_batch_equals_its_parts(spark, pos_idx):
+    """All positional kinds share one pseudo-term pipeline: a batch mixing
+    them must return, per query, exactly the rows that query returns when
+    searched alone."""
+    from patapsco_spark.config import RetrieveConfig
+    from patapsco_spark.operators.retrieve import search
+
+    def rows(plans):
+        out = {}
+        for r in search(spark, pos_idx, plans, RetrieveConfig(k=5)).collect():
+            out.setdefault(r["query_id"], []).append(tuple(r))
+        return out
+
+    plans = _mixed_plans()
+    mixed = rows(plans)
+    for p in plans:
+        alone = rows([p])
+        assert alone.get(p.qid), f"{p.qid} matches nothing alone"
+        assert mixed.get(p.qid) == alone[p.qid], p.qid
+
+
 def test_multi_phrase_rewrite_is_one_job_and_one_union(spark, pos_idx):
     """A batch with MANY distinct phrases must trigger O(1) driver-blocking
     jobs during plan construction (one stats collect for ALL phrases — the
     round-2 shape ran 2 jobs PER phrase) and add exactly one union branch to
-    the postings frame regardless of phrase count."""
+    the postings frame regardless of phrase count — as must a batch mixing
+    every positional clause kind."""
     from patapsco_spark.config import RetrieveConfig
+    from patapsco_spark.operators.retrieve import search
     from patapsco_spark.operators.retrieve import search_texts as st
 
     sc = spark.sparkContext
@@ -107,9 +149,12 @@ def test_multi_phrase_rewrite_is_one_job_and_one_union(spark, pos_idx):
     # subtree is printed twice in the optimized plan (the norms-side dynamic
     # partition pruning subquery embeds a copy), so 1 union node ⇒ ≤2 lines;
     # 4 per-phrase unions would print ≥8.
-    logical = res._jdf.queryExecution().optimizedPlan().toString()
-    n_unions = sum(1 for ln in logical.splitlines() if "Union" in ln)
-    assert n_unions <= 2, f"{n_unions} union lines — per-phrase branches crept back in"
+    mixed = search(spark, pos_idx, _mixed_plans(), RetrieveConfig(k=5))
+    for df in (res, mixed):
+        logical = df._jdf.queryExecution().optimizedPlan().toString()
+        n_unions = sum(1 for ln in logical.splitlines() if "Union" in ln)
+        assert n_unions <= 2, \
+            f"{n_unions} union lines — per-phrase branches crept back in"
     # and the results are still correct: every query returns hits
     got = {r["query_id"] for r in res.collect()}
     assert got == {"q1", "q2", "q3", "q4"}

@@ -91,3 +91,16 @@ def test_no_inference_job(spark, tmp_path):
     n_after = len(sc.statusTracker().getJobIdsForGroup("pqread-nojob"))
     sc.setJobGroup(None, None)
     assert n_before == n_after == 0
+
+
+def test_hive_default_partition_falls_back(spark, tmp_path):
+    # a NULL partition value is written as __HIVE_DEFAULT_PARTITION__;
+    # Spark types the level from the other values and reads the marker as
+    # NULL, so the helper must defer to stock inference there
+    p = str(tmp_path / "nullpart")
+    spark.createDataFrame([(1, 0), (2, None), (3, 1)],
+                          "docid long, shard int") \
+        .write.partitionBy("shard").parquet(p)
+    assert any("__HIVE_DEFAULT_PARTITION__" in d for d in os.listdir(p))
+    assert pqread._derive_schema(p) is None
+    _check_identical(spark, p)
