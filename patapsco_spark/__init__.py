@@ -6,8 +6,8 @@ Python iterators + Lucene/pyserini) as an idiomatic Spark engine:
 - text processing (normalize/tokenize/stem/stopwords) as vectorized
   pandas/Arrow UDF kernels (no per-row Python),
 - a distributed SPIMI-style inverted-index build producing delta-gapped
-  varbyte-compressed, block-max-annotated posting lists stored as
-  shard-partitioned Parquet,
+  varbyte-compressed, independently decodable posting-list blocks stored
+  as shard-partitioned Parquet,
 - Lucene-compatible BM25 / QLD / PSQ / boolean top-k retrieval that is
   rank- and score-identical to Lucene's defaults (incl. the lossy SmallFloat
   norm quantization),

@@ -53,7 +53,7 @@ class IndexConfig:
 
     text: TextConfig = field(default_factory=TextConfig)
     num_shards: int | None = None         # default: derived from input partitions
-    block_size: int = 128                 # postings per block-max block
+    block_size: int = 128                 # postings per codec block
     target_docs_per_shard: int = 250_000  # used when num_shards is None
     # write a positions/ sidecar (shard, term, docid, positions) enabling
     # exact phrase scoring — EXCEEDS the reference, whose Lucene index stores
@@ -84,12 +84,6 @@ class RetrieveConfig:
     # quantized norms as bm25/qld.
     name: str = "bm25"
     k: int = 1000                         # schema.py:159 "number"
-    # block-max pruning for disjunctive BM25: "auto" prunes only when the
-    # matched postings volume is large enough that skipping decodes beats
-    # the pruner's own bound-pass overhead (vectorized dense scoring is
-    # memory-bandwidth fast; see retrieve._BlockMaxPruner notes)
-    pruning: str = "auto"                 # auto | always | never
-    pruning_min_postings: int = 20_000_000
     k1: float = 0.9                       # schema.py:169
     b: float = 0.4                        # schema.py:170
     mu: int = 1000                        # schema.py:171-172 (QLD)
@@ -115,14 +109,10 @@ class RetrieveConfig:
     # (score, docid) of the LAST hit of the previous page, exactly as
     # returned by search() — results strictly after it in (score desc,
     # docid asc) order. A tuple applies to every query in the batch; a
-    # {qid: (score, docid)} dict pages queries independently. Paging
-    # disables the block-max pruner (its seed pass would set thresholds
-    # from already-returned docs); correctness over cleverness, and page
-    # N>1 is the rare path.
+    # {qid: (score, docid)} dict pages queries independently.
     after: tuple | dict | None = None
     # Lucene BooleanQuery.setMinimumNumberShouldMatch, applied to the TOP
     # boolean level of every query in the batch: a doc qualifies only if
     # at least this many SHOULD clauses individually match it. 0/1 are the
-    # plain OR semantics (any match); >1 forces the dense path (the
-    # block-max pruner's bounds assume any-of-terms matching).
+    # plain OR semantics (any match).
     min_should_match: int = 0

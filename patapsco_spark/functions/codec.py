@@ -1,4 +1,4 @@
-"""Delta-gapped varbyte posting-list codec with block-max metadata.
+"""Delta-gapped varbyte posting-list codec with per-block docid fences.
 
 A posting list for one (shard, term) is a sorted sequence of
 ``(docid, tf)`` pairs. We store it as one compact binary blob:
@@ -6,9 +6,10 @@ A posting list for one (shard, term) is a sorted sequence of
 - docids are delta-gapped (``gap[0] = docid[0] - shard_base``,
   ``gap[i] = docid[i] - docid[i-1]``) and varbyte-encoded,
 - term frequencies are varbyte-encoded in a second section,
-- per fixed-size block (default 128 postings) we keep
-  ``(last_docid, max_tf, min_norm_len)`` sidecar arrays so a scorer can
-  compute a per-block BM25 upper bound and skip blocks (block-max WAND).
+- per fixed-size block (default 128 postings) we keep the block's last
+  docid (a fence), its byte offset and its gap-section length, so any
+  block decodes on its own (term vectors decode only the block that holds
+  a doc).
 
 The varbyte scheme is the classic 7-bits-per-byte continuation encoding
 (high bit set on non-final bytes of a value — as used by Lucene's VInt and
@@ -115,22 +116,12 @@ def decode_postings(blob: bytes, count: int, base: int = 0) -> tuple[np.ndarray,
     return docids.astype(np.int64), tfs.astype(np.int64)
 
 
-def block_meta(docids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-               block_size: int = BLOCK_SIZE) -> tuple[list[int], list[int], list[int]]:
-    """Per-block (last_docid, max_tf, min_quantized_doclen) for block-max WAND.
-
-    ``dls`` are the *quantized* doc lengths aligned with ``docids``. The BM25
-    upper bound for a block is ``idf * max_tf / (max_tf + k1*(1-b+b*min_dl/avgdl))``
-    — monotone up in tf and down in dl, so (max_tf, min_dl) bounds any k1/b.
-    """
+def block_meta(docids: np.ndarray, block_size: int = BLOCK_SIZE) -> list[int]:
+    """Per-block last docid (the ``block_last`` fences) of sorted ``docids``."""
+    docids = np.asarray(docids, dtype=np.int64)
     n = len(docids)
-    last, mtf, mdl = [], [], []
-    for s in range(0, n, block_size):
-        e = min(s + block_size, n)
-        last.append(int(docids[e - 1]))
-        mtf.append(int(tfs[s:e].max()))
-        mdl.append(int(dls[s:e].min()))
-    return last, mtf, mdl
+    return docids[np.minimum(np.arange(block_size - 1, n + block_size - 1,
+                                       block_size), n - 1)].tolist()
 
 
 def encode_postings_blocked(docids: np.ndarray, tfs: np.ndarray, base: int = 0,
@@ -138,8 +129,7 @@ def encode_postings_blocked(docids: np.ndarray, tfs: np.ndarray, base: int = 0,
                             ) -> tuple[bytes, list[int], list[int]]:
     """Block-independent encoding: each block's delta chain restarts from the
     previous block's last docid, and per-block byte offsets are returned, so
-    ANY block decodes without touching the others — the physical requirement
-    for block-max skipping.
+    ANY block decodes without touching the others.
 
     Layout: ``concat_i( gap_section_i || tf_section_i )``.
     Returns (blob, block_off, block_gap_len): section start offsets and the

@@ -114,18 +114,3 @@ def quantize_length_sql(col: str) -> str:
         f"WHEN {v} < 8 THEN {col} "
         f"ELSE 24 + (({v} >> {s}) << {s}) END)"
     )
-
-
-def quantize_length_expr(col: str) -> str:
-    """Spark-SQL expression computing ``quantize_length(col)`` — the same
-    closed form as :func:`quantize_length_sql` spelled with Spark's
-    ``shiftright``/``shiftleft`` builtins (Catalyst-side quantization lets
-    the tf-emission stage run without a Python worker; equality with the
-    numpy reference is pinned exhaustively in tests/test_fast_path.py)."""
-    v = f"({col} - 24)"
-    s = f"(CAST(FLOOR(LOG2({v})) AS INT) - 3)"
-    return (
-        f"(CASE WHEN {col} < 24 THEN {col} "
-        f"WHEN {v} < 8 THEN {col} "
-        f"ELSE 24 + shiftleft(shiftright({v}, {s}), {s}) END)"
-    )

@@ -87,13 +87,7 @@ def _make_tf_kernel(docs_per_shard: int, deleted=None):
 
         terms, docids, tfs = [], [], []
         for row in posts_pdf.itertuples(index=False):
-            h = _TermHandle(bytes(row.postings),
-                            np.asarray(row.block_last, dtype=np.int64),
-                            np.asarray(row.block_max_tf, dtype=np.int64),
-                            np.asarray(row.block_min_dlq, dtype=np.int64),
-                            np.asarray(row.block_off, dtype=np.int64),
-                            np.asarray(row.block_gap_len, dtype=np.int64),
-                            base)
+            h = _TermHandle.from_row(row, base)
             d, t = h.decode(np.arange(len(h.block_off), dtype=np.int64))
             if dead is not None and len(dead):
                 keep = ~np.isin(d - base, dead)
@@ -451,8 +445,8 @@ def search_dismax(spark: SparkSession, field_indexes: Mapping[str, str],
     (rank-identity oracle bm25_topk), so each v_f is bit-replayable.
 
     Scale shape (100 TB): the per-field match sets are exactly the rows a
-    per-field disjunction already scores (block-pruning cannot apply:
-    a max-combine needs every field's hit to bound the max); their union
+    per-field disjunction already scores (no per-field depth cut can
+    apply: a max-combine needs every field's hit to bound the max); their union
     feeds ONE combinable groupBy (partial aggregation map-side) keyed by
     (query, doc), then a k-bounded window. Float determinism: Σ_f folds
     over array_sort(struct(field, v)) — fixed field-name order — and max

@@ -146,16 +146,8 @@ def _eval_match(clauses, size, positions, mm=0):
 def _term_positions_fn(posts_pdf: pd.DataFrame, base: int):
     """Lazy whole-list decoder for a shard's (already In-filtered) postings
     frame: term → LOCAL docid array, cached. Shared kernel plumbing."""
-    handles: dict[str, _TermHandle] = {}
-    for row in posts_pdf.itertuples(index=False):
-        handles[row.term] = _TermHandle(
-            bytes(row.postings),
-            np.asarray(row.block_last, dtype=np.int64),
-            np.asarray(row.block_max_tf, dtype=np.int64),
-            np.asarray(row.block_min_dlq, dtype=np.int64),
-            np.asarray(row.block_off, dtype=np.int64),
-            np.asarray(row.block_gap_len, dtype=np.int64),
-            base)
+    handles = {row.term: _TermHandle.from_row(row, base)
+               for row in posts_pdf.itertuples(index=False)}
     decoded: dict[str, np.ndarray] = {}
 
     def positions(term):

@@ -14,7 +14,7 @@ index terms wrongly; combined-stats scoring is the correctness bar.
 Plan shape: one term_stats read per index (pushed In(term) filter,
 segment-aggregated), summed driver-side (bounded by |query terms|); then
 ``search(..., stats_override=...)`` per index — each runs its normal
-cogrouped shard kernel, block-max pruning intact, and cuts to k LOCALLY
+cogrouped shard kernel unchanged, and cuts to k LOCALLY
 (exact: the global top-k is contained in the union of per-index top-ks
 because every index's cut keeps its k best under the same global
 scoring); finally one window over the ≤ |indexes|·k merged rows. No

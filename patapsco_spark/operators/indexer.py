@@ -6,7 +6,8 @@ Layout written under ``index_path``:
 
     analyzed/   (id, lang, terms, dl[, original_text]) range-partitioned by id
     norms/      shard=K/ (docid, id, dl, norm)        Lucene norm byte per doc
-    postings/   shard=K/ (term, df, cf, max_tf, postings, block_*)
+    postings/   shard=K/ (term, df, cf, max_tf, postings, block_last,
+                          block_off, block_gap_len)
     term_stats/ (term, df, cf)                        global df/cf per term
     manifest.json                                     stats + lineage + config
 
@@ -25,10 +26,11 @@ Design notes (100 TB thinking):
   movement) and docid = file_offset + row_number within file. This is the
   one global sort the engine pays at build time.
 - **Map-side tf counting**: term frequencies are computed inside the Arrow
-  batch kernel (one (term,docid,tf,dlq) row per *distinct* term per doc),
+  batch kernel (one (term,docid,tf) row per *distinct* term per doc),
   so the shuffle moves per-doc term counts, not the raw token stream.
-- **Compression**: postings are delta-gapped varbyte blobs with per-block
-  (last_docid, max_tf, min_dlq) sidecars for block-max pruning.
+- **Compression**: postings are delta-gapped varbyte blobs in independently
+  decodable blocks of ``block_size`` postings, each fenced by its last
+  docid (``block_last``) and located by ``block_off``/``block_gap_len``.
 """
 
 from __future__ import annotations
@@ -44,14 +46,13 @@ from pyspark.sql import functions as F
 from ..config import IndexConfig
 from ..functions.analyze import analyze_documents
 from ..functions.codec import block_meta, encode_postings_blocked
-from ..functions.smallfloat import quantize_length
 from ..plans import manifest as mf
 from ..plans.pqread import read_parquet
 
 POSTINGS_SCHEMA = (
     "shard int, term string, df long, cf long, max_tf long, "
-    "postings binary, block_last array<long>, block_max_tf array<long>, "
-    "block_min_dlq array<long>, block_off array<long>, block_gap_len array<long>"
+    "postings binary, block_last array<long>, block_off array<long>, "
+    "block_gap_len array<long>"
 )
 
 
@@ -143,8 +144,10 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
     # the manifest resume gate (e.g. pre-blocked postings lack block_off).
     # 4 = norms_packed partitioned by shard + term_stats as additive seg=
     # segments (both needed for idempotent streaming-append overwrites).
+    # 5 = blocks keep only their docid fences (the block-max score sidecars
+    # are gone; readers accept >= 4 because they never read those).
     build_cfg = dict(cfg_doc, num_docs=num_docs, num_shards=num_shards,
-                     docs_per_shard=docs_per_shard, postings_format=4,
+                     docs_per_shard=docs_per_shard, postings_format=5,
                      positions=bool(cfg.positions))
 
     if not (resume and mf.is_complete(postings_path, "postings", build_cfg)):
@@ -183,14 +186,12 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
 
         # per-doc term frequencies — pure Catalyst (round 5): sort each
         # doc's term array, find run boundaries with HOFs, explode one row
-        # per distinct term; SmallFloat dl quantization via its closed-form
-        # SQL. Replaces the Arrow-batched _emit_tf kernel: the whole token
-        # stream used to cross JVM→Python→JVM here — on the measured host
-        # that IPC is the throughput ceiling, and it burns cluster memory
-        # bandwidth at any scale. _emit_tf remains as the cross-check
-        # reference kernel (tests pin row-identical output).
-        tf_rows = emit_tf_catalyst(
-            docided.select("shard", "docid", "dl", "terms"))
+        # per distinct term. Replaces the Arrow-batched _emit_tf kernel: the
+        # whole token stream used to cross JVM→Python→JVM here — on the
+        # measured host that IPC is the throughput ceiling, and it burns
+        # cluster memory bandwidth at any scale. _emit_tf remains as the
+        # cross-check reference kernel (tests pin row-identical output).
+        tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "terms"))
 
         # SPIMI merge: one shuffle keyed on shard; a reducer receives (at
         # most) one whole shard sorted by (term, docid) and ONE kernel builds
@@ -308,34 +309,29 @@ def _pick_partitions(spark: SparkSession, pages: DataFrame, cfg: IndexConfig) ->
 
 
 def emit_tf_catalyst(docided: DataFrame) -> DataFrame:
-    """(shard, docid, dl, terms[]) → (shard, term, docid, tf, dlq), JVM-side.
+    """(shard, docid, terms[]) → (shard, term, docid, tf), JVM-side.
 
     The map-side combine of the SPIMI build with zero Python: per row,
     ``array_sort`` the term array, compute run-start offsets with a HOF
     filter, then explode one (term, tf) struct per run. tf = distance to
-    the next run start; dlq = Lucene SmallFloat round-trip of dl via its
-    closed-form SQL (pinned against the numpy reference in
-    tests/test_fast_path.py). Row-identical to :func:`_emit_tf` (also
-    pinned), which stays as the cross-check kernel."""
-    from ..functions.smallfloat import quantize_length_expr
-
+    the next run start. Row-identical to :func:`_emit_tf` (pinned in
+    tests/test_fast_path.py), which stays as the cross-check kernel."""
     return (
         docided
         .where(F.size("terms") > 0)
-        .withColumn("dlq", F.expr(quantize_length_expr("dl")).cast("int"))
         .withColumn("s_terms", F.expr("array_sort(terms)"))
         .withColumn("starts", F.expr(
             "filter(sequence(0, size(s_terms)-1), "
             "i -> i = 0 OR s_terms[i] != get(s_terms, i-1))"))
-        .select("shard", "docid", "dlq", F.explode(F.expr(
+        .select("shard", "docid", F.explode(F.expr(
             "transform(starts, (st, j) -> struct(s_terms[st] as term, "
             "coalesce(get(starts, j+1), size(s_terms)) - st as tf))")).alias("p"))
         .select("shard", F.col("p.term").alias("term"), "docid",
-                F.col("p.tf").cast("int").alias("tf"), "dlq"))
+                F.col("p.tf").cast("int").alias("tf")))
 
 
 def _emit_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(shard, docid, dl, terms[]) batches → (shard, term, docid, tf, dlq).
+    """(shard, docid, terms[]) batches → (shard, term, docid, tf).
 
     Fully vectorized: flatten token arrays with np.repeat/concatenate, then a
     single C-level groupby-size — the map-side combine of the SPIMI build.
@@ -349,18 +345,15 @@ def _emit_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lens = term_lists.map(len).to_numpy(dtype=np.int64)
         if lens.sum() == 0:
             continue
-        dlq = quantize_length(pdf["dl"].to_numpy())
         flat = pd.DataFrame({
             "shard": np.repeat(pdf["shard"].to_numpy(), lens),
             "docid": np.repeat(pdf["docid"].to_numpy(), lens),
-            "dlq": np.repeat(dlq, lens),
             "term": np.concatenate([np.asarray(t, dtype=object) for t in term_lists]),
         })
-        agg = (flat.groupby(["shard", "docid", "dlq", "term"], sort=False)
+        agg = (flat.groupby(["shard", "docid", "term"], sort=False)
                    .size().rename("tf").reset_index())
         agg["tf"] = agg["tf"].astype(np.int32)
-        agg["dlq"] = agg["dlq"].astype(np.int32)
-        yield agg[["shard", "term", "docid", "tf", "dlq"]]
+        yield agg[["shard", "term", "docid", "tf"]]
 
 
 def _emit_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -431,7 +424,6 @@ def _make_postings_kernel(block_size: int, docs_per_shard: int):
         terms = pdf["term"].to_numpy()
         docids = pdf["docid"].to_numpy()
         tfs = pdf["tf"].to_numpy()
-        dlqs = pdf["dlq"].to_numpy()
         # run boundaries over (shard, term)
         change = np.empty(len(pdf), dtype=bool)
         change[0] = True
@@ -440,24 +432,21 @@ def _make_postings_kernel(block_size: int, docs_per_shard: int):
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], len(pdf))
         out = {k: [] for k in ("shard", "term", "df", "cf", "max_tf",
-                               "postings", "block_last", "block_max_tf",
-                               "block_min_dlq", "block_off", "block_gap_len")}
+                               "postings", "block_last", "block_off",
+                               "block_gap_len")}
         for s, e in zip(starts, ends):
             shard = int(shards[s])
             base = shard * docs_per_shard
-            d, t, q = docids[s:e], tfs[s:e], dlqs[s:e]
+            d, t = docids[s:e], tfs[s:e]
             blob, offs, gap_lens = encode_postings_blocked(
                 d, t, base=base, block_size=block_size)
-            last, mtf, mdlq = block_meta(d, t, q, block_size=block_size)
             out["shard"].append(shard)
             out["term"].append(terms[s])
             out["df"].append(e - s)
             out["cf"].append(int(t.sum()))
             out["max_tf"].append(int(t.max()))
             out["postings"].append(blob)
-            out["block_last"].append(last)
-            out["block_max_tf"].append(mtf)
-            out["block_min_dlq"].append(mdlq)
+            out["block_last"].append(block_meta(d, block_size))
             out["block_off"].append(offs)
             out["block_gap_len"].append(gap_lens)
         yield pd.DataFrame(out)

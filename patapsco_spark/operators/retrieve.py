@@ -194,9 +194,7 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     without materializing the match set (operators/retrieve.py
     search_filtered is the sidecar-less fields-table alternative); scores
     keep the unrestricted corpus statistics, as a filter clause never
-    contributes to scoring. The block-max pruner is disabled (its seed
-    pass could under-seed from filtered-out docs); a filter-aware bound
-    pass is the natural extension if profiling demands it.
+    contributes to scoring.
 
     ``dv_boost`` = (name, params): EXACT function_score decay — ES
     ``function_score`` with a decay function, executed like ES does it
@@ -207,8 +205,7 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     decay (0.5), shape ('gauss' | 'exp' | 'linear'), mode ('multiply' |
     'sum'), weight (1.0, sum only). The factor is computed vectorized
     from the field's packed blob; docs missing the value take factor 1.0
-    (ES's missing-field behavior). Applies to any scorer; the pruner is
-    disabled (its bounds don't see the factor)."""
+    (ES's missing-field behavior). Applies to any scorer."""
     if count_only and matches_only:
         raise ValueError("count_only and matches_only are exclusive")
     cfg = cfg or RetrieveConfig()
@@ -333,7 +330,9 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     posts = (read_parquet(spark, f"{index_path}/postings")
              .where(F.col("term").isin(live_terms) & live_pred))
     if pseudo_posts is not None:
-        posts = posts.unionByName(pseudo_posts)
+        # a format-4 index still carries two sidecar columns the encode no
+        # longer writes; nothing reads them
+        posts = posts.unionByName(pseudo_posts, allowMissingColumns=True)
     # packed norms: ONE blob row per shard (the full norms table is only
     # touched at the end, partition-pruned, to resolve top-k external ids)
     norms_packed = (read_parquet(spark, f"{index_path}/norms_packed")
@@ -386,30 +385,9 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
     plans_payload = [
         (p.qid, [_clause_payload(c) for c in p.clauses]) for p in plans
     ]
-    # adaptive pruning decision: the block-max pruner pays an O(size)
-    # bound pass + a seed pass before it can skip anything; vectorized
-    # dense scoring is memory-bandwidth fast, so pruning only wins once the
-    # decode volume is large (measured: ~0.6x at 8M postings/shard, grows
-    # favorable as lists far exceed cache/bandwidth budgets)
-    matched_postings = sum(df for df, _ in df_map.values())
-    use_pruner = cfg.pruning == "always" or (
-        cfg.pruning == "auto"
-        and matched_postings >= cfg.pruning_min_postings)
     after = cfg.after
-    if after is not None:
-        if not isinstance(after, dict):
-            after = {p.qid: tuple(after) for p in plans}
-        # the pruner's seed/threshold passes don't know the cursor and
-        # could prune docs the page must surface — dense path when paging
-        use_pruner = False
-    if count_only or matches_only:
-        use_pruner = False  # counting/collecting needs the full candidate set
-    if cfg.min_should_match > 1:
-        use_pruner = False  # pruner bounds assume any-of-terms matching
-    if dv_filter is not None:
-        use_pruner = False  # seed pass could under-seed from filtered docs
-    if dv_boost is not None:
-        use_pruner = False  # block-max bounds don't see the decay factor
+    if after is not None and not isinstance(after, dict):
+        after = {p.qid: tuple(after) for p in plans}
 
     scorer = _make_shard_scorer(
         plans_payload, df_map, scorer=cfg.name,
@@ -417,7 +395,7 @@ def search(spark: SparkSession, index_path: str, plans: list[QueryPlan],
         mu=cfg.mu, lam=cfg.lam, dfr_c=cfg.dfr_c, ax_s=cfg.ax_s,
         ax_k=cfg.ax_k,
         num_docs=num_docs, total_tf=total_tf, avgdl=avgdl,
-        docs_per_shard=docs_per_shard, use_pruner=use_pruner,
+        docs_per_shard=docs_per_shard,
         idf_over=idf_over, deleted=deleted, after=after,
         count_only=count_only, min_should_match=cfg.min_should_match,
         dv_range=dv_range, dv_boost=boost_params)
@@ -1588,27 +1566,17 @@ def _pseudo_kind_enabled(kind, meta, scorer, stats_override) -> bool:
 
 
 def _encode_pseudo(rows, meta):
-    """(term, shard, docid, tf, dl | dlq) rows of pseudo-terms → postings
-    rows, through the SAME blocked varbyte kernel as regular postings —
-    the scorer needs no pseudo-term path."""
+    """(term, shard, docid, tf) rows of pseudo-terms → postings rows,
+    through the SAME blocked varbyte kernel as regular postings — the
+    scorer needs no pseudo-term path."""
     from .indexer import POSTINGS_SCHEMA, _make_postings_kernel
 
     kernel = _make_postings_kernel(int(meta.get("block_size", 128)),
                                    int(meta["docs_per_shard"]))
-    length = "dlq" if "dlq" in rows.columns else "dl"
-
-    def encode(batches):
-        if length == "dl":  # quantize raw lengths the way the indexer does
-            batches = (b.assign(dlq=quantize_length(
-                b.pop("dl").to_numpy()).astype("int32"))
-                for b in batches if not b.empty)
-        yield from kernel(batches)
-
-    return (rows.select("shard", "term", "docid", F.col("tf").cast("int"),
-                        F.col(length).cast("int"))
+    return (rows.select("shard", "term", "docid", F.col("tf").cast("int"))
             .repartition(int(meta["num_shards"]), "shard")
             .sortWithinPartitions("shard", "term", "docid")
-            .mapInPandas(encode, schema=POSTINGS_SCHEMA))
+            .mapInPandas(kernel, schema=POSTINGS_SCHEMA))
 
 
 def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
@@ -1686,8 +1654,6 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
                .where(F.col("term").isin(sorted({m[1] for m in memb}))
                       & live_pred)
                .withColumnRenamed("term", "word"))
-        norms = (read_parquet(spark, f"{index_path}/norms")
-                 .where(live_pred).select("shard", "docid", "dl"))
         branches = [(F.col("kind") == k.name, k.tf(F.col("items")))
                     for k in present]
         tf = F.when(*branches[0])
@@ -1699,7 +1665,6 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
                        .alias("items"))
                   .select("term", "shard", "docid", tf.alias("tf"))
                   .where(F.col("tf") > 0)
-                  .join(norms, ["shard", "docid"])
                   .localCheckpoint(eager=True))
         stats = {r["term"]: (int(r["df"]), int(r["cf"]))
                  for r in tf_all.groupBy("term")
@@ -1738,7 +1703,7 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
                   .withColumn("shard", (F.col("docid") / F.lit(
                       int(meta["docs_per_shard"]))).cast("int"))
                   .groupBy("term", "shard", "docid")
-                  .agg(F.sum("tf").alias("tf"), F.max("dlq").alias("dlq")))
+                  .agg(F.sum("tf").alias("tf")))
         parts.append(_encode_pseudo(summed, meta))
 
     def pseudo_of(c):
@@ -1772,7 +1737,7 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
 def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
                        lam=0.1, dfr_c=1.0, ax_s=0.5, ax_k=0.35,
                        num_docs, total_tf, avgdl, docs_per_shard,
-                       use_pruner=True, idf_over=None, deleted=None,
+                       idf_over=None, deleted=None,
                        after=None, count_only=False, min_should_match=0,
                        dv_range=None, dv_boost=None):
     """Build the per-shard cogrouped kernel. Pure numpy inside.
@@ -1783,18 +1748,13 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
     ``deleted`` maps shard → sorted local positions of tombstoned docs
     (operators/deletes.py): those positions are masked out of the candidate
     set before the local top-k, while df/cf/num_docs/avgdl stay at the
-    manifest values (Lucene pre-merge delete semantics). A tombstoned shard
-    takes the dense path — the block-max pruner's bounds would still be
-    valid upper bounds over a masked candidate set, but its seed pass could
-    pick deleted docs and under-seed the threshold; correctness over
-    cleverness until compaction clears the tombstones.
+    manifest values (Lucene pre-merge delete semantics).
 
     ``after`` maps qid → (score, docid) page cursor: only docs strictly
     after it in (score desc, docid asc) order survive, applied BEFORE the
     local top-k cut. Score recomputation is bit-deterministic (same kernel,
     same doubles, same order), so equality against the previous page's
-    returned score is exact. Callers must not hand the pruner a cursored
-    query (search() forces the dense path when paging).
+    returned score is exact.
 
     ``count_only`` turns the kernel into Lucene's TotalHitCountCollector:
     one row per (query, shard) with score = number of matching docs (after
@@ -1918,19 +1878,8 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
             dl_dfi = dlq
 
         # per-term postings handles: decode lazily, by block
-        handles: dict[str, _TermHandle] = {}
-        for row in posts_pdf.itertuples(index=False):
-            handles[row.term] = _TermHandle(
-                bytes(row.postings),
-                np.asarray(row.block_last, dtype=np.int64),
-                np.asarray(row.block_max_tf, dtype=np.int64),
-                np.asarray(row.block_min_dlq, dtype=np.int64),
-                np.asarray(row.block_off, dtype=np.int64),
-                np.asarray(row.block_gap_len, dtype=np.int64),
-                base)
-
-        bmw = _BlockMaxPruner(size, base, k1, b, avgdl, num_docs, k) \
-            if (scorer == "bm25" and use_pruner) else None
+        handles = {row.term: _TermHandle.from_row(row, base)
+                   for row in posts_pdf.itertuples(index=False)}
         decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
         def full(term):
@@ -2092,30 +2041,6 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
 
         out_q, out_d, out_s = [], [], []
         for qid, clauses in plans_payload:
-            # fast path: pure disjunctive single-term BM25 (plain/RM3/
-            # weighted-OR queries) goes through the block-max pruner.
-            # ts[0][1] == 1.0 excludes PSQ-probability terms: the dense
-            # kernel scores those with EXPECTED statistics (idf(p·df),
-            # p·tf), which the pruner's multiplicative weight cannot
-            # reproduce — results must not depend on the pruning heuristic
-            # (RM3/boosted terms carry their weight in the clause boost
-            # with p = 1.0, so they keep the fast path)
-            if bmw is not None and dead is None and dv_ok is None \
-                    and not count_only \
-                    and qid not in after and all(
-                    occ == SHOULD and len(ts) == 1 and ts[0][1] == 1.0
-                    and not kids
-                    for occ, _, ts, kids in clauses):
-                terms_w = [(ts[0][0], boost * ts[0][1])
-                           for _, boost, ts, _kids in clauses]
-                got = bmw.topk(terms_w, handles, df_map, K, idf_over)
-                if got is not None:
-                    cpos, cscore = got
-                    if len(cpos):
-                        out_q.append(np.full(len(cpos), qid, dtype=object))
-                        out_d.append(cpos + base)
-                        out_s.append(cscore)
-                    continue
             total, cand, has_scoring_clause = eval_clauses(
                 clauses, mm=min_should_match)
             if dead is not None and len(dead):
@@ -2170,141 +2095,27 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
 class _TermHandle:
     """Lazy, block-granular access to one term's postings in a shard."""
 
-    __slots__ = ("blob", "block_last", "block_max_tf", "block_min_dlq",
-                 "block_off", "block_gap_len", "base")
+    __slots__ = ("blob", "block_last", "block_off", "block_gap_len", "base")
 
-    def __init__(self, blob, block_last, block_max_tf, block_min_dlq,
-                 block_off, block_gap_len, base):
+    def __init__(self, blob, block_last, block_off, block_gap_len, base):
         self.blob = blob
         self.block_last = block_last
-        self.block_max_tf = block_max_tf
-        self.block_min_dlq = block_min_dlq
         self.block_off = block_off
         self.block_gap_len = block_gap_len
         self.base = base
 
+    @classmethod
+    def from_row(cls, row, base: int) -> "_TermHandle":
+        """Handle over one postings row (a Spark Row or a pandas tuple) —
+        the one place that knows the postings row layout."""
+        return cls(bytes(row.postings),
+                   np.asarray(row.block_last, dtype=np.int64),
+                   np.asarray(row.block_off, dtype=np.int64),
+                   np.asarray(row.block_gap_len, dtype=np.int64), base)
+
     def decode(self, which: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         return decode_blocks(self.blob, which, self.block_off,
                              self.block_gap_len, self.block_last, self.base)
-
-    def spans(self) -> tuple[np.ndarray, np.ndarray]:
-        """Conservative per-block local docid spans [lo, hi] (inclusive):
-        lo = previous block's last + 1 (earliest possible first docid)."""
-        hi = self.block_last - self.base
-        lo = np.empty_like(hi)
-        lo[0] = 0
-        lo[1:] = hi[:-1] + 1
-        return lo, hi
-
-
-class _BlockMaxPruner:
-    """Exact top-k for disjunctive weighted BM25 with block-max skipping,
-    vectorized (numpy) rather than doc-at-a-time:
-
-    1. optimistic bound O(d) for every doc slot via difference arrays over
-       block spans — O(#blocks), no decoding;
-    2. exact-score the k docs with highest O (decoding only blocks that
-       contain them) → threshold θ = kth best exact score (a valid lower
-       bound on the true kth score);
-    3. candidates = {d : O(d) ≥ θ}; decode only blocks whose span contains a
-       candidate; exact-score candidates; top-k.
-
-    Correctness: s(d) ≤ O(d) ∀d, so every true top-k doc is a candidate, and
-    every candidate's decoded contributions are complete (a posting's block
-    span always contains its doc). Scores are exactly the dense scorer's.
-    This is the block-max WAND idea (Ding & Suel, SIGIR'11) restructured for
-    columnar execution: bounds and skipping at block granularity, but
-    batch-vectorized instead of a per-doc pivot walk.
-    """
-
-    def __init__(self, size, base, k1, b, avgdl, num_docs, k):
-        self.size = size
-        self.base = base
-        self.k1, self.b, self.avgdl = k1, b, avgdl
-        self.num_docs = num_docs
-        self.k = k
-
-    def _block_ub(self, h: _TermHandle, w: float, idf: float) -> np.ndarray:
-        mtf = h.block_max_tf.astype(np.float64)
-        mdlq = h.block_min_dlq.astype(np.float64)
-        kpart = self.k1 * (1.0 - self.b + self.b * mdlq / self.avgdl)
-        return w * idf * mtf / (mtf + kpart)
-
-    def topk(self, terms_w, handles, df_map, K, idf_over=None):
-        """terms_w: [(term, weight)]. Returns (local_positions, scores) or
-        None to signal 'use the fallback path'."""
-        idf_over = idf_over or {}
-        alive = []
-        for term, w in terms_w:
-            stat = df_map.get(term)
-            h = handles.get(term)
-            if stat is None or h is None or stat[0] <= 0:
-                continue
-            idf = idf_over.get(term)
-            if idf is None:
-                idf = _bm25_idf(self.num_docs, stat[0])
-            alive.append((h, w, idf))
-        if not alive:
-            return np.zeros(0, dtype=np.int64), np.zeros(0)
-
-        # phase 1: optimistic bounds via diff arrays
-        diff = np.zeros(self.size + 1, dtype=np.float64)
-        sum_ub = 0.0  # Σ per-term max block bound — upper bound on any O(d)
-        for h, w, idf in alive:
-            ub = self._block_ub(h, w, idf)
-            sum_ub += float(ub.max()) if ub.size else 0.0
-            lo, hi = h.spans()
-            np.add.at(diff, lo, ub)
-            np.subtract.at(diff, hi + 1, ub)
-        O = np.cumsum(diff[:-1])
-
-        nz = np.flatnonzero(O > 0)
-        if nz.size == 0:
-            return np.zeros(0, dtype=np.int64), np.zeros(0)
-        kk = min(self.k, nz.size)
-
-        def exact(cand_sorted: np.ndarray) -> np.ndarray:
-            """Exact scores for sorted candidate positions; decodes only
-            blocks whose span contains a candidate."""
-            total = np.zeros(self.size, dtype=np.float64)
-            for h, w, idf in alive:
-                lo, hi = h.spans()
-                # block contains a candidate ⟺ a candidate falls in [lo, hi]
-                left = np.searchsorted(cand_sorted, lo, side="left")
-                right = np.searchsorted(cand_sorted, hi, side="right")
-                which = np.flatnonzero(right > left)
-                if which.size == 0:
-                    continue
-                d, tf = h.decode(which)
-                pos = d - self.base
-                tf = tf.astype(np.float64)
-                total[pos] += w * idf * tf / (tf + K[pos])
-            return total
-
-        # phase 2: threshold from the top-kk optimistic docs
-        seeds = nz[np.argpartition(-O[nz], kk - 1)[:kk]]
-        seeds.sort()
-        seed_scores = exact(seeds)[seeds]
-        theta = np.partition(seed_scores, len(seed_scores) - kk)[len(seed_scores) - kk] \
-            if len(seed_scores) >= kk else 0.0
-        theta = max(theta, 0.0)
-
-        # phase 3: candidates + exact scoring. The cut slack is RELATIVE to
-        # the bound magnitudes: O comes from an np.cumsum over a shard-sized
-        # diff array, whose accumulated float error scales with the summed
-        # magnitudes (≈ √n·ε_machine·Σub ≪ 1e-9·Σub even at 10^8 slots), so
-        # an absolute 1e-12 could drop an exact-tie doc at production scale.
-        # Extra slack only admits more candidates — never wrong results.
-        slack = 1e-9 * max(sum_ub, 1.0)
-        cand = np.flatnonzero(O >= theta - slack)
-        total = exact(cand)
-        cscore = total[cand]
-        matched = cscore > 0
-        cand, cscore = cand[matched], cscore[matched]
-        if len(cand) > self.k:
-            part = np.argpartition(-cscore, self.k - 1)[:self.k]
-            cand, cscore = cand[part], cscore[part]
-        return cand, cscore
 
 
 def _empty_result() -> pd.DataFrame:
@@ -2399,13 +2210,7 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
     docs_per_shard = int(meta["docs_per_shard"])
     tf_by = {}
     for row in posts:
-        h = _TermHandle(bytes(row["postings"]),
-                        np.asarray(row["block_last"], dtype=np.int64),
-                        np.asarray(row["block_max_tf"], dtype=np.int64),
-                        np.asarray(row["block_min_dlq"], dtype=np.int64),
-                        np.asarray(row["block_off"], dtype=np.int64),
-                        np.asarray(row["block_gap_len"], dtype=np.int64),
-                        int(row["shard"]) * docs_per_shard)
+        h = _TermHandle.from_row(row, int(row["shard"]) * docs_per_shard)
         d, t = h.decode(np.arange(len(h.block_last)))
         for docid, tf in zip(d, t):
             if int(docid) in want:

@@ -88,19 +88,14 @@ def doc_term_vectors(spark: SparkSession, index_path: str,
         base = int(key[0]) * docs_per_shard
         terms, docids, tfs = [], [], []
         for row in pdf.itertuples(index=False):
-            bl = np.asarray(row.block_last, dtype=np.int64)
+            h = _TermHandle.from_row(row, base)
+            bl = h.block_last
             # block_last is a global-docid fence per block: the first block
             # whose last >= target is the only one that can hold it
             need = np.unique(np.searchsorted(bl, tg, side="left"))
             need = need[need < len(bl)]
             if not len(need):
                 continue
-            h = _TermHandle(bytes(row.postings), bl,
-                            np.asarray(row.block_max_tf, dtype=np.int64),
-                            np.asarray(row.block_min_dlq, dtype=np.int64),
-                            np.asarray(row.block_off, dtype=np.int64),
-                            np.asarray(row.block_gap_len, dtype=np.int64),
-                            base)
             d, t = h.decode(need)
             keep = np.isin(d, tg)
             if keep.any():

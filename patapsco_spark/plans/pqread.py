@@ -43,7 +43,11 @@ _INT_RE = re.compile(r"^-?\d+$")
 # path -> (signature, StructType). The signature pins the physical layout
 # (first data file path + its size + mtime), so a rewritten/replaced
 # artifact re-derives its schema; a cache hit only ever skips re-reading
-# the SAME footer bytes. Metadata only — no rows, no results.
+# the SAME footer bytes. Metadata only — no rows, no results. Bounded:
+# past _SCHEMA_CACHE_MAX paths the oldest entry is evicted (FIFO), so a
+# long-lived driver reading many staged/temp paths cannot grow it forever;
+# an evicted path just re-reads its footer on the next read.
+_SCHEMA_CACHE_MAX = 1024
 _SCHEMA_CACHE: dict[str, tuple[tuple, T.StructType]] = {}
 
 
@@ -209,5 +213,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _derive_schema(path) if sig is not None else None
     if schema is None:
         return spark.read.parquet(path)
+    _SCHEMA_CACHE.pop(path, None)
+    while _SCHEMA_CACHE and len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+        del _SCHEMA_CACHE[next(iter(_SCHEMA_CACHE))]
     _SCHEMA_CACHE[path] = (sig, schema)
     return spark.read.schema(schema).parquet(path)

@@ -116,7 +116,7 @@ def _synth_batch(idx: np.ndarray, vocab: str = "base") -> pd.DataFrame:
     stresses posting-list length, not pruning). ``vocab="zipf"``: 50k-word
     Zipf-distributed vocabulary via inverse-CDF over hash bytes (realistic
     web-text shape: stopword-like heads, long rare tail — the regime where
-    block-max pruning and prefix filtering pay off)."""
+    prefix filtering pays off)."""
     n = len(idx)
     # 16 hash bytes per doc drive all choices (stable across everything)
     digests = [hashlib.md5(f"page-{i}".encode()).digest() for i in idx]

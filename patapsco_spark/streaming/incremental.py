@@ -151,7 +151,7 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_path: str,
      .write.mode("overwrite").options(**dyn).partitionBy("shard")
      .parquet(f"{index_path}/norms_packed"))
 
-    tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "dl", "terms"))
+    tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "terms"))
     postings = (tf_rows
                 .repartition(new_shard_count, "shard")
                 .sortWithinPartitions("shard", "term", "docid")
@@ -449,7 +449,7 @@ def compact_index(spark: SparkSession, index_path: str,
                .applyInPandas(
                    _make_decode_remap_kernel(dps, remap, dels_by_shard,
                                              new_docs_per_shard=new_dps),
-                   schema="shard int, term string, docid long, tf int, dlq int"))
+                   schema="shard int, term string, docid long, tf int"))
     (tf_rows.repartition(new_shard_count, "shard")
      .sortWithinPartitions("shard", "term", "docid")
      .mapInPandas(_make_postings_kernel(block_size, new_dps),
@@ -602,8 +602,7 @@ def _make_decode_remap_kernel(docs_per_shard: int,
     with a new shard size."""
     import pandas as pd
 
-    from ..functions.codec import decode_blocks
-    from ..functions.smallfloat import byte4_to_int
+    from ..operators.retrieve import _TermHandle
 
     out_dps = new_docs_per_shard or docs_per_shard
 
@@ -613,8 +612,7 @@ def _make_decode_remap_kernel(docs_per_shard: int,
             "shard": pd.Series(dtype=np.int32),
             "term": pd.Series(dtype=object),
             "docid": pd.Series(dtype=np.int64),
-            "tf": pd.Series(dtype=np.int32),
-            "dlq": pd.Series(dtype=np.int32)})
+            "tf": pd.Series(dtype=np.int32)})
         if posts_pdf.empty:
             return empty
         if packed_pdf.empty:
@@ -629,16 +627,10 @@ def _make_decode_remap_kernel(docs_per_shard: int,
         mn, nb = remap[old_shard]
         base = old_shard * docs_per_shard
         dels_s = None if dels is None else dels.get(old_shard)
-        codes = np.frombuffer(bytes(packed_pdf["codes"].iloc[0]),
-                              dtype=np.uint8)
-        terms, docids, tfs, dlqs = [], [], [], []
+        terms, docids, tfs = [], [], []
         for row in posts_pdf.itertuples(index=False):
-            offs = np.asarray(row.block_off, dtype=np.int64)
-            d, tf = decode_blocks(bytes(row.postings),
-                                  np.arange(len(offs)), offs,
-                                  np.asarray(row.block_gap_len, dtype=np.int64),
-                                  np.asarray(row.block_last, dtype=np.int64),
-                                  base)
+            h = _TermHandle.from_row(row, base)
+            d, tf = h.decode(np.arange(len(h.block_last)))
             if dels_s is not None and len(dels_s):
                 at = np.searchsorted(dels_s, d)
                 hit = (at < len(dels_s)) & (dels_s[np.minimum(
@@ -649,7 +641,6 @@ def _make_decode_remap_kernel(docs_per_shard: int,
                 new_ids = d - mn + nb - at  # shift by |dels < docid|
             else:
                 new_ids = d - mn + nb
-            dlqs.append(byte4_to_int(codes[d - base]))
             docids.append(new_ids)
             tfs.append(tf)
             terms.append(np.full(len(d), row.term, dtype=object))
@@ -660,8 +651,7 @@ def _make_decode_remap_kernel(docs_per_shard: int,
             "shard": (docid // out_dps).astype(np.int32),
             "term": np.concatenate(terms),
             "docid": docid,
-            "tf": np.concatenate(tfs).astype(np.int32),
-            "dlq": np.concatenate(dlqs).astype(np.int32)})
+            "tf": np.concatenate(tfs).astype(np.int32)})
 
     return kernel
 

@@ -63,18 +63,14 @@ def test_postings_roundtrip(pairs, base):
 
 def test_block_meta():
     docids = np.arange(0, 300, dtype=np.int64)
-    tfs = np.arange(1, 301, dtype=np.int64)
-    dls = np.full(300, 50, dtype=np.int64)
-    dls[130] = 7
-    last, mtf, mdl = block_meta(docids, tfs, dls, block_size=128)
-    assert last == [127, 255, 299]
-    assert mtf == [128, 256, 300]
-    assert mdl == [50, 7, 50]
+    assert block_meta(docids, block_size=128) == [127, 255, 299]
+    assert block_meta(docids[:256], block_size=128) == [127, 255]
+    assert block_meta(docids[:0], block_size=128) == []
 
 
 def test_blocked_encode_partial_decode():
     """Blocks decode independently: full and partial reads match the input
-    (the physical contract behind block-max skipping)."""
+    (the contract term vectors rely on to decode one block)."""
     import numpy as np
     from patapsco_spark.functions.codec import (
         block_meta, decode_blocks, encode_postings_blocked)
@@ -84,7 +80,7 @@ def test_blocked_encode_partial_decode():
     tfs = rng.randint(1, 90, len(docids)).astype(np.int64)
     base, bs = 1000, 128
     blob, offs, glens = encode_postings_blocked(docids, tfs, base=base, block_size=bs)
-    last, _, _ = block_meta(docids, tfs, tfs, block_size=bs)
+    last = block_meta(docids, block_size=bs)
     offs, glens, last = map(np.asarray, (offs, glens, last))
 
     d, t = decode_blocks(blob, np.arange(len(offs)), offs, glens, last, base=base)

@@ -70,15 +70,6 @@ class TestTombstoneMasking:
         assert m3["deletes_batches"] == 1
         assert "d2" not in [d for d, _ in _hits(spark, idx)]
 
-    def test_pruner_config_identical_on_tombstoned_index(self, spark,
-                                                         tmp_path):
-        """pruning='always' and 'never' must agree on a tombstoned index
-        (tombstoned shards fall back to the dense path)."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=2)
-        delete_docs(spark, idx, ["d5"])
-        assert _hits(spark, idx, pruning="always") == \
-            _hits(spark, idx, pruning="never")
-
     def test_delete_masks_phrases(self, spark, tmp_path):
         idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1,
                      positions=True)

@@ -8,24 +8,16 @@ The index build's two IPC-elimination moves are correctness-gated here:
    corpus that mixes ASCII, whitespace oddities, mojibake, unicode, nulls,
    over-length docs, and \r-terminated strings (the Java-$ trap).
 2. Catalyst tf emission (operators/indexer.emit_tf_catalyst) must be
-   row-identical to the Arrow reference kernel (_emit_tf), and the
-   Spark-SQL SmallFloat closed form must equal the numpy implementation
-   exhaustively over the realistic dl range and at power-of-two edges.
+   row-identical to the Arrow reference kernel (_emit_tf).
 """
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from patapsco_spark.config import IndexConfig, TextConfig
 from patapsco_spark.functions.analyze import (
     analyze_documents,
     catalyst_fast_eligible,
-)
-from patapsco_spark.functions.smallfloat import (
-    quantize_length,
-    quantize_length_expr,
 )
 from patapsco_spark.operators.indexer import _emit_tf, emit_tf_catalyst
 
@@ -123,24 +115,6 @@ def test_catalyst_with_transform(spark):
     assert _rows(fast) == _rows(slow)
 
 
-def test_quantize_expr_matches_numpy(spark):
-    # domain: Lucene intToByte4 takes a java int, so dl < 2^31 (MAX_TEXT_LEN
-    # bounds real dl at 10^6 anyway); exhaustive small range + pow2 edges
-    dls = np.concatenate([
-        np.arange(0, 200_000, dtype=np.int64),
-        np.array([2**k + d for k in range(5, 31) for d in (-1, 0, 1)],
-                 dtype=np.int64) + 24,
-    ])
-    dls = dls[dls < 2**31]
-    pdf = pd.DataFrame({"dl": dls})
-    got = (spark.createDataFrame(pdf)
-           .select(F.expr(quantize_length_expr("dl")).alias("q"))
-           .toPandas()["q"].to_numpy())
-    want = quantize_length(dls)
-    bad = np.flatnonzero(got != want)
-    assert bad.size == 0, f"mismatch at dl={dls[bad[:5]]}: {got[bad[:5]]} vs {want[bad[:5]]}"
-
-
 def test_emit_tf_catalyst_matches_kernel(spark):
     rows = []
     rng = np.random.RandomState(7)
@@ -148,19 +122,17 @@ def test_emit_tf_catalyst_matches_kernel(spark):
     for docid in range(40):
         n = int(rng.randint(0, 30))
         terms = [vocab[i] for i in rng.randint(0, len(vocab), n)]
-        rows.append((docid % 3, docid, len(terms) + int(rng.randint(0, 500)),
-                     terms))
-    rows.append((0, 99, 0, []))       # empty terms → no rows
-    rows.append((1, 100, 5, None))    # null terms → no rows
-    df = spark.createDataFrame(
-        rows, "shard int, docid long, dl long, terms array<string>")
+        rows.append((docid % 3, docid, terms))
+    rows.append((0, 99, []))       # empty terms → no rows
+    rows.append((1, 100, None))    # null terms → no rows
+    df = spark.createDataFrame(rows, "shard int, docid long, terms array<string>")
 
     got = emit_tf_catalyst(df)
     want = df.mapInPandas(
-        _emit_tf, schema="shard int, term string, docid long, tf int, dlq int")
+        _emit_tf, schema="shard int, term string, docid long, tf int")
     key = ["shard", "term", "docid"]
-    g = sorted([tuple(r) for r in got.select(*key, "tf", "dlq").collect()])
-    w = sorted([tuple(r) for r in want.select(*key, "tf", "dlq").collect()])
+    g = sorted([tuple(r) for r in got.select(*key, "tf").collect()])
+    w = sorted([tuple(r) for r in want.select(*key, "tf").collect()])
     assert g == w and len(g) > 0
 
 

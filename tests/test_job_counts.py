@@ -24,8 +24,8 @@ RAW = TextConfig(stem=None, stopwords=None, lowercase=True)
 # warm jobs measured on Spark 4.1, local[4], over the index below (AQE
 # stage jobs + stats collect(s) + save); "mixed" is the phrase, span_near
 # and span_first plans in one search(), within one job of its largest part
-BUDGET = {"bm25": 8, "phrase": 15, "span_near": 15, "span_first": 15,
-          "mixed": 15}
+BUDGET = {"bm25": 8, "phrase": 14, "span_near": 14, "span_first": 14,
+          "mixed": 14}
 
 
 @pytest.fixture(scope="module")

@@ -125,12 +125,6 @@ def test_phrase_explain_sums_to_score(spark, pos_index):
         assert by_doc[d] == pytest.approx(s, rel=1e-9)
 
 
-def test_phrase_pruner_identity(spark, pos_index):
-    a = _run(spark, pos_index, '"red fox" today', pruning="always")
-    b = _run(spark, pos_index, '"red fox" today', pruning="never")
-    assert a == b and len(a) > 0
-
-
 def test_phrase_qld_matches_closed_form(spark, pos_index):
     """QLD positional phrases (exceeds the reference, which always degrades):
     the phrase pseudo-term scores through the standard LMDirichlet formula

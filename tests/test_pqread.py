@@ -104,3 +104,25 @@ def test_hive_default_partition_falls_back(spark, tmp_path):
     assert any("__HIVE_DEFAULT_PARTITION__" in d for d in os.listdir(p))
     assert pqread._derive_schema(p) is None
     _check_identical(spark, p)
+
+
+def test_schema_cache_is_bounded_fifo(spark, tmp_path, monkeypatch):
+    # past the cap the OLDEST path goes; reading it again re-derives its
+    # schema from the footer (and evicts the next-oldest in turn)
+    monkeypatch.setattr(pqread, "_SCHEMA_CACHE", {})
+    monkeypatch.setattr(pqread, "_SCHEMA_CACHE_MAX", 3)
+    derived = []
+    real = pqread._derive_schema
+    monkeypatch.setattr(pqread, "_derive_schema",
+                        lambda p: derived.append(p) or real(p))
+    paths = [str(tmp_path / f"t{i}") for i in range(4)]
+    for i, p in enumerate(paths):
+        spark.range(i + 1).write.parquet(p)
+        pqread.read_parquet(spark, p)
+    assert list(pqread._SCHEMA_CACHE) == paths[1:]
+    assert derived == paths
+    assert pqread.read_parquet(spark, paths[0]).count() == 1
+    assert derived == paths + paths[:1]
+    assert list(pqread._SCHEMA_CACHE) == paths[2:] + paths[:1]
+    pqread.read_parquet(spark, paths[3])  # a hit: no footer read
+    assert len(derived) == 5

@@ -90,3 +90,71 @@ class TestResume:
         nb = {(r.id, r.docid) for r in
               spark.read.parquet(f"{b}/norms").collect()}
         assert na == nb
+
+    def test_format4_postings_read_compact_and_rebuild(self, spark, tmp_path):
+        """A format-4 index (postings still carrying the two block-max
+        sidecar columns) searches and compacts to the same rows, and a
+        resume build rewrites its postings at format 5 without them."""
+        import glob
+        import json
+        import os
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from patapsco_spark.streaming.incremental import compact_index
+
+        idx = str(tmp_path / "idx4")
+        rows = [(f"d{i:03d}", f"alpha beta gamma{i % 7} delta"
+                 + " alpha" * (i % 3), "eng") for i in range(40)]
+        docs = spark.createDataFrame(rows, "id string, text string, lang string")
+        icfg = IndexConfig(text=CFG, num_shards=2, positions=True)
+        queries = [("plain", "alpha gamma3"), ("phrase", '"beta gamma2"')]
+
+        def hits(path):
+            res = search_texts(spark, path, queries, RetrieveConfig(k=50),
+                               text_cfg=CFG, mode="boolean")
+            return sorted((r.query_id, r.doc_id, r.score)
+                          for r in res.collect())
+
+        build_index(spark, docs, idx, icfg, resume=False)
+        want = hits(idx)
+        assert {q for q, _, _ in want} == {"plain", "phrase"}
+
+        post_files = glob.glob(f"{idx}/postings/shard=*/*.parquet")
+        for f in post_files:
+            t = pq.read_table(f)
+            ones = pa.array([[1] * len(b) for b in
+                             t.column("block_last").to_pylist()],
+                            pa.list_(pa.int64()))
+            pq.write_table(t.append_column("block_max_tf", ones)
+                           .append_column("block_min_dlq", ones), f)
+            # the rewrite invalidates Hadoop's checksum sidecar
+            crc = os.path.join(os.path.dirname(f),
+                               f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        for m in glob.glob(f"{idx}/**/{mf.MANIFEST}", recursive=True):
+            with open(m) as fh:
+                doc = json.load(fh)
+            if doc.get("config", {}).get("postings_format") == 5:
+                doc["config"]["postings_format"] = 4
+                with open(m, "w") as fh:
+                    json.dump(doc, fh)
+        assert mf.read_manifest(idx)["config"]["postings_format"] == 4
+
+        assert hits(idx) == want
+        compacted = str(tmp_path / "idx4c")
+        shutil.copytree(idx, compacted)
+        compact_index(spark, compacted, mode="full")
+        assert hits(compacted) == want
+
+        build_index(spark, docs, idx, icfg, resume=True)
+        assert mf.read_manifest(f"{idx}/postings")["config"][
+            "postings_format"] == 5
+        for f in glob.glob(f"{idx}/postings/shard=*/*.parquet"):
+            names = pq.read_schema(f).names
+            assert "block_max_tf" not in names
+            assert "block_min_dlq" not in names
+        assert hits(idx) == want

@@ -51,16 +51,6 @@ class TestSearchAfter:
         # past the end: empty page
         assert _page(spark, idx, 3, after=cursor) == []
 
-    def test_paging_identical_under_forced_pruning_config(self, spark,
-                                                          tmp_path):
-        """after= must force the dense path even under pruning='always' —
-        the page content cannot depend on the pruning heuristic."""
-        idx = _build(spark, tmp_path / "idx")
-        p1 = _page(spark, idx, 3)
-        cursor = (p1[-1]["score"], p1[-1]["docid"])
-        assert _page(spark, idx, 3, after=cursor, pruning="always") == \
-            _page(spark, idx, 3, after=cursor, pruning="never")
-
     def test_per_query_cursor_dict(self, spark, tmp_path):
         idx = _build(spark, tmp_path / "idx")
         plans = process_queries([("a", "stream"), ("b", "window")], CFG,
