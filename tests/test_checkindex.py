@@ -32,18 +32,25 @@ def _build(spark, path, **kw):
     return str(path)
 
 
+def _base(index_copy, spark, path, **kw):
+    """The test's own copy of the CORPUS index (built once per ``kw``)."""
+    key = ("checkindex", tuple(sorted(kw.items())))
+    return index_copy(key, path, lambda p: _build(spark, p, **kw))
+
+
 class TestHealthy:
-    def test_fresh_build_clean_including_deep(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", positions=True)
+    def test_fresh_build_clean_including_deep(self, spark, tmp_path,
+                                              index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", positions=True)
         rep = check_index(spark, idx, deep=True, raise_on_error=True)
         assert rep["ok"]
         assert rep["postings_deep"]["ok"]
         assert rep["positions"]["ok"]
 
-    def test_maintained_index_clean(self, spark, tmp_path):
+    def test_maintained_index_clean(self, spark, tmp_path, index_copy):
         """Appends + an upsert + a delete leave every invariant intact:
         live ids stay unique, tombstones resolve, stats stay frozen."""
-        idx = _build(spark, tmp_path / "idx")
+        idx = _base(index_copy, spark, tmp_path / "idx")
         append_batch(spark, _docs(spark, [("e1", "stream probe", "eng")]),
                      idx, IndexConfig(text=CFG), epoch_id=0)
         update_docs(spark, idx,
@@ -55,8 +62,8 @@ class TestHealthy:
 
 
 class TestCorruption:
-    def test_tampered_global_stats_flagged(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx")
+    def test_tampered_global_stats_flagged(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx")
         root = mf.read_manifest(idx)
         bad = dict(root["config"])
         bad["num_docs"] = int(bad["num_docs"]) + 1
@@ -66,18 +73,18 @@ class TestCorruption:
         with pytest.raises(CorruptIndexError, match="global_stats"):
             check_index(spark, idx, raise_on_error=True)
 
-    def test_duplicate_live_id_flagged(self, spark, tmp_path):
+    def test_duplicate_live_id_flagged(self, spark, tmp_path, index_copy):
         """A raw append of an already-live id (bypassing update_docs) is
         exactly the corruption live_ids exists to catch."""
-        idx = _build(spark, tmp_path / "idx")
+        idx = _base(index_copy, spark, tmp_path / "idx")
         append_batch(spark, _docs(spark, [("d1", "stray copy", "eng")]),
                      idx, IndexConfig(text=CFG), epoch_id=0)
         rep = check_index(spark, idx)
         assert not rep["live_ids"]["ok"]
         assert rep["live_ids"]["duplicates"][0][0] == "d1"
 
-    def test_dangling_tombstone_flagged(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx")
+    def test_dangling_tombstone_flagged(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx")
         root = mf.read_manifest(idx)
         meta = dict(root["config"])
         batch = int(meta.get("deletes_batches", 0))
@@ -91,31 +98,31 @@ class TestCorruption:
         assert not rep["tombstones"]["ok"]
         assert (0, 999999, "ghost") in rep["tombstones"]["dangling"]
 
-    def test_missing_packed_shard_flagged(self, spark, tmp_path):
+    def test_missing_packed_shard_flagged(self, spark, tmp_path, index_copy):
         import shutil
 
-        idx = _build(spark, tmp_path / "idx")
+        idx = _base(index_copy, spark, tmp_path / "idx")
         shutil.rmtree(f"{idx}/norms_packed/shard=1")
         rep = check_index(spark, idx)
         assert not rep["norms_packed"]["ok"]
         assert any(r[0] == 1 for r in rep["norms_packed"]["bad_shards"])
 
-    def test_missing_norms_shard_flagged(self, spark, tmp_path):
+    def test_missing_norms_shard_flagged(self, spark, tmp_path, index_copy):
         """Review fix: a shard with a packed blob but NO norms rows must be
         flagged (null-safe full-join filter), not silently pass."""
         import shutil
 
-        idx = _build(spark, tmp_path / "idx")
+        idx = _base(index_copy, spark, tmp_path / "idx")
         shutil.rmtree(f"{idx}/norms/shard=1")
         rep = check_index(spark, idx)
         assert not rep["norms_packed"]["ok"]
         assert any(r[0] == 1 for r in rep["norms_packed"]["bad_shards"])
 
     def test_manifest_missing_keys_reported_not_keyerror(self, spark,
-                                                         tmp_path):
+                                                         tmp_path, index_copy):
         """Review fix: a manifest lacking required keys yields a report
         with manifest.ok=False (or CorruptIndexError), never a KeyError."""
-        idx = _build(spark, tmp_path / "idx")
+        idx = _base(index_copy, spark, tmp_path / "idx")
         root = mf.read_manifest(idx)
         bad = {k: v for k, v in root["config"].items()
                if k != "docs_per_shard"}

@@ -44,12 +44,18 @@ def _build(spark, path, rows, **idx_kw):
     return str(path)
 
 
+def _base(index_copy, spark, path, rows, **idx_kw):
+    """The test's own copy of the index over ``rows`` (built once)."""
+    key = ("deletes", tuple(rows), tuple(sorted(idx_kw.items())))
+    return index_copy(key, path, lambda p: _build(spark, p, rows, **idx_kw))
+
+
 class TestTombstoneMasking:
-    def test_masked_and_stats_frozen(self, spark, tmp_path):
+    def test_masked_and_stats_frozen(self, spark, tmp_path, index_copy):
         """A deleted doc stops matching immediately; every surviving doc
         keeps its EXACT pre-delete score (df/N/avgdl frozen at the
         manifest — Lucene's pre-merge contract)."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=2)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=2)
         before = dict(_hits(spark, idx))
         assert "d1" in before
         delete_docs(spark, idx, ["d1", "d3"])
@@ -59,8 +65,8 @@ class TestTombstoneMasking:
         for doc, score in after:
             assert score == before[doc]  # frozen stats, identical scores
 
-    def test_unknown_and_redelete_are_noops(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+    def test_unknown_and_redelete_are_noops(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         m0 = mf.read_manifest(idx)["config"]
         m1 = delete_docs(spark, idx, ["nope"])
         assert m1.get("deletes_batches", 0) == m0.get("deletes_batches", 0)
@@ -70,8 +76,8 @@ class TestTombstoneMasking:
         assert m3["deletes_batches"] == 1
         assert "d2" not in [d for d, _ in _hits(spark, idx)]
 
-    def test_delete_masks_phrases(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1,
+    def test_delete_masks_phrases(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1,
                      positions=True)
         res0 = _hits(spark, idx, '"stream window"')
         assert "d3" in dict(res0)
@@ -81,11 +87,11 @@ class TestTombstoneMasking:
 
 class TestCompactionAppliesDeletes:
     def test_full_compaction_equals_rebuild_on_survivors(self, spark,
-                                                         tmp_path):
+                                                         tmp_path, index_copy):
         """After a FULL compaction the index scores exactly like a fresh
         build over the surviving docs — stats, postings, norms all
         physically reflect the deletes."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=2)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=2)
         delete_docs(spark, idx, ["d1", "d4"])
         compact_index(spark, idx, mode="full")
         survivors = [r for r in CORPUS if r[0] not in ("d1", "d4")]
@@ -96,8 +102,8 @@ class TestCompactionAppliesDeletes:
         assert meta["deletes_base"] == meta["deletes_batches"]  # window empty
         assert read_tombstones(spark, idx, meta) is None
 
-    def test_full_compaction_with_positions(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=2,
+    def test_full_compaction_with_positions(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=2,
                      positions=True)
         delete_docs(spark, idx, ["d3"])
         compact_index(spark, idx, mode="full")
@@ -107,12 +113,12 @@ class TestCompactionAppliesDeletes:
         assert _hits(spark, idx, '"stream window"') == \
             _hits(spark, ref, '"stream window"')
 
-    def test_tiered_carries_kept_tombstones(self, spark, tmp_path):
+    def test_tiered_carries_kept_tombstones(self, spark, tmp_path, index_copy):
         """Tiered compaction applies tombstones only in the merged tail;
         a tombstone in a kept (full) base shard is carried forward and
         still masks — then a later FULL compaction converges to the
         rebuild-on-survivors fixpoint."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         # one full base shard (5 docs / dps 5); append an underfilled tail
         append_batch(spark, _docs(spark, [
             ("e1", "stream stream scan", "eng"),
@@ -134,18 +140,20 @@ class TestCompactionAppliesDeletes:
         ref = _build(spark, tmp_path / "ref", survivors, num_shards=1)
         assert _hits(spark, idx) == _hits(spark, ref)
 
-    def test_append_after_delete_keeps_tombstones(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+    def test_append_after_delete_keeps_tombstones(self, spark, tmp_path,
+                                                  index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         delete_docs(spark, idx, ["d1"])
         append_batch(spark, _docs(spark, [("f1", "stream table", "eng")]),
                      idx, IndexConfig(text=CFG), epoch_id=0)
         ids = dict(_hits(spark, idx))
         assert "d1" not in ids and "f1" in ids
 
-    def test_delete_by_query_and_idempotence(self, spark, tmp_path):
+    def test_delete_by_query_and_idempotence(self, spark, tmp_path,
+                                             index_copy):
         """deleteDocuments(Query) parity: every match tombstoned, repeat
         call writes nothing (masked docs no longer match)."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=2)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=2)
         delete_by_query(spark, idx, "probe", text_cfg=CFG)  # d3, d5
         ids = dict(_hits(spark, idx))
         assert "d3" not in ids and "d5" not in ids and "d1" in ids
@@ -153,19 +161,19 @@ class TestCompactionAppliesDeletes:
         m2 = delete_by_query(spark, idx, "probe", text_cfg=CFG)
         assert m2["deletes_batches"] == m1["deletes_batches"]
 
-    def test_delete_by_boolean_query(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+    def test_delete_by_boolean_query(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         delete_by_query(spark, idx, "+stream -filter", text_cfg=CFG,
                         mode="boolean")  # stream without filter: d1 only
         ids = dict(_hits(spark, idx))
         assert "d1" not in ids
         assert {"d2", "d3", "d4", "d5"} <= set(ids)
 
-    def test_update_docs_upsert(self, spark, tmp_path):
+    def test_update_docs_upsert(self, spark, tmp_path, index_copy):
         """updateDocument parity: new version matches immediately, old
         version stops matching, unknown id is a plain add, stats count
         both copies until a full compaction converges to the rebuild."""
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         assert "d3" in dict(_hits(spark, idx, "probe"))
         upd = _docs(spark, [("d3", "table cache", "eng"),
                             ("u1", "stream probe", "eng")])
@@ -182,8 +190,8 @@ class TestCompactionAppliesDeletes:
         assert _hits(spark, idx) == _hits(spark, ref)
         assert _hits(spark, idx, "cache") == _hits(spark, ref, "cache")
 
-    def test_update_replay_is_exactly_once(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx", CORPUS, num_shards=1)
+    def test_update_replay_is_exactly_once(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS, num_shards=1)
         upd = _docs(spark, [("d2", "replaced stream text", "eng")])
         update_docs(spark, idx, upd, IndexConfig(text=CFG), epoch_id=5)
         h1 = _hits(spark, idx)
@@ -194,10 +202,11 @@ class TestCompactionAppliesDeletes:
         assert (m2["deletes_batches"], m2["num_docs"]) == \
             (m1["deletes_batches"], m1["num_docs"])
 
-    def test_everything_deleted_in_tail(self, spark, tmp_path):
+    def test_everything_deleted_in_tail(self, spark, tmp_path, index_copy):
         """Deleting every doc the compaction merges must not corrupt the
         index (empty-tail edge: off == 0)."""
-        idx = _build(spark, tmp_path / "idx", CORPUS[:2], num_shards=1)
+        idx = _base(index_copy, spark, tmp_path / "idx", CORPUS[:2],
+                    num_shards=1)
         delete_docs(spark, idx, ["d1", "d2"])
         meta = compact_index(spark, idx, mode="full")
         assert meta["num_docs"] == 0

@@ -19,15 +19,17 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "id string, text string, lang string")
 
 
-@pytest.fixture()
-def idx(spark, tmp_path):
-    path = str(tmp_path / "idx")
+def _build(spark, path):
     build_index(spark, _docs(spark, [
         ("p1", "alpha beta pad", "eng"),
         ("p2", "alpha pad pad", "eng"),
         ("p3", "beta pad pad", "eng"),
     ]), path, IndexConfig(text=RAW, num_shards=2))
-    return path
+
+
+@pytest.fixture()
+def idx(spark, tmp_path, index_copy):
+    return index_copy("pit", tmp_path / "idx", lambda p: _build(spark, p))
 
 
 def _hits(spark, idx_path, pit=None):

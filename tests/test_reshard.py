@@ -34,6 +34,15 @@ def _results(spark, idx):
                   for r in res.collect())
 
 
+def _base(index_copy, spark, path, **kw):
+    """The test's own copy of the ROWS index (built once per ``kw``)."""
+    return index_copy(("reshard",) + tuple(sorted(kw.items())), path,
+                      lambda p: build_index(
+                          spark, _docs(spark, ROWS), p,
+                          IndexConfig(text=CFG, num_shards=4, **kw),
+                          resume=False))
+
+
 def _live_shards(idx, meta):
     shards = {int(d.split("=")[1]) for d in os.listdir(f"{idx}/postings")
               if d.startswith("shard=")}
@@ -42,10 +51,8 @@ def _live_shards(idx, meta):
 
 
 @pytest.mark.parametrize("new_dps", [2, 7])  # shrink=bigger, split=smaller
-def test_reshard_preserves_results(spark, tmp_path, new_dps):
-    idx = str(tmp_path / f"rs{new_dps}")
-    build_index(spark, _docs(spark, ROWS), idx,
-                IndexConfig(text=CFG, num_shards=4), resume=False)
+def test_reshard_preserves_results(spark, tmp_path, index_copy, new_dps):
+    idx = _base(index_copy, spark, tmp_path / f"rs{new_dps}")
     before = _results(spark, idx)
     old = mf.read_manifest(idx)["config"]
     assert int(old["docs_per_shard"]) == 3  # 12 docs / 4 shards
@@ -60,10 +67,8 @@ def test_reshard_preserves_results(spark, tmp_path, new_dps):
     assert meta["shard_base"] >= old["num_shards"]
 
 
-def test_append_after_reshard(spark, tmp_path):
-    idx = str(tmp_path / "rsapp")
-    build_index(spark, _docs(spark, ROWS), idx,
-                IndexConfig(text=CFG, num_shards=4), resume=False)
+def test_append_after_reshard(spark, tmp_path, index_copy):
+    idx = _base(index_copy, spark, tmp_path / "rsapp")
     reshard_index(spark, idx, docs_per_shard=5)
     append_batch(spark, _docs(spark, [
         ("z1", "stream appended red", "eng")]), idx,
@@ -73,11 +78,8 @@ def test_append_after_reshard(spark, tmp_path):
     assert [r.doc_id for r in res.collect()] == ["z1"]
 
 
-def test_reshard_positions_index_keeps_phrases(spark, tmp_path):
-    idx = str(tmp_path / "rspos")
-    build_index(spark, _docs(spark, ROWS), idx,
-                IndexConfig(text=CFG, num_shards=4, positions=True),
-                resume=False)
+def test_reshard_positions_index_keeps_phrases(spark, tmp_path, index_copy):
+    idx = _base(index_copy, spark, tmp_path / "rspos", positions=True)
     q = [("q", '"red fox"')]
     before = sorted((r.doc_id, round(r.score, 12)) for r in search_texts(
         spark, idx, q, RetrieveConfig(k=50), text_cfg=CFG,
@@ -89,10 +91,8 @@ def test_reshard_positions_index_keeps_phrases(spark, tmp_path):
     assert after == before and len(before) == len(ROWS)
 
 
-def test_tiered_refuses_size_change(spark, tmp_path):
-    idx = str(tmp_path / "rstier")
-    build_index(spark, _docs(spark, ROWS), idx,
-                IndexConfig(text=CFG, num_shards=4), resume=False)
+def test_tiered_refuses_size_change(spark, tmp_path, index_copy):
+    idx = _base(index_copy, spark, tmp_path / "rstier")
     with pytest.raises(ValueError, match="resharding requires mode='full'"):
         compact_index(spark, idx, mode="tiered", docs_per_shard=5)
     with pytest.raises(ValueError, match="docs_per_shard"):

@@ -20,11 +20,15 @@ CORPUS = [
 ]
 
 
-def _build(spark, path):
+def _fresh(spark, path):
     docs = spark.createDataFrame(CORPUS, "id string, text string, lang string")
     build_index(spark, docs, str(path), IndexConfig(text=CFG, num_shards=3),
                 resume=False)
-    return str(path)
+
+
+def _build(index_copy, spark, path):
+    """The test's own copy of the CORPUS index (built once)."""
+    return index_copy("search_after", path, lambda p: _fresh(spark, p))
 
 
 def _page(spark, idx, k, after=None, **kw):
@@ -34,8 +38,8 @@ def _page(spark, idx, k, after=None, **kw):
 
 
 class TestSearchAfter:
-    def test_pages_tile_the_full_ranking(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx")
+    def test_pages_tile_the_full_ranking(self, spark, tmp_path, index_copy):
+        idx = _build(index_copy, spark, tmp_path / "idx")
         full = _page(spark, idx, 10)
         assert len(full) == 7
         pages, cursor = [], None
@@ -51,8 +55,8 @@ class TestSearchAfter:
         # past the end: empty page
         assert _page(spark, idx, 3, after=cursor) == []
 
-    def test_per_query_cursor_dict(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx")
+    def test_per_query_cursor_dict(self, spark, tmp_path, index_copy):
+        idx = _build(index_copy, spark, tmp_path / "idx")
         plans = process_queries([("a", "stream"), ("b", "window")], CFG,
                                 mode="plain")
         full = search(spark, idx, plans, RetrieveConfig(k=10)).collect()
@@ -72,12 +76,13 @@ class TestSearchAfter:
 
 
 class TestMoreLikeThis:
-    def test_source_ranks_first_and_gates_apply(self, spark, tmp_path):
+    def test_source_ranks_first_and_gates_apply(self, spark, tmp_path,
+                                                index_copy):
         import pytest
 
         from patapsco_spark.operators.retrieve import more_like_this
 
-        idx = _build(spark, tmp_path / "idx")
+        idx = _build(index_copy, spark, tmp_path / "idx")
         like = "stream stream window window filter"  # tf≥2: stream, window
         res = more_like_this(spark, idx, like, CFG, min_tf=2, min_df=1,
                              max_terms=25, cfg=RetrieveConfig(k=10)).collect()
@@ -93,10 +98,10 @@ class TestMoreLikeThis:
         with pytest.raises(ValueError, match="min_tf"):
             more_like_this(spark, idx, "all distinct words here", CFG)
 
-    def test_max_terms_caps_selection(self, spark, tmp_path):
+    def test_max_terms_caps_selection(self, spark, tmp_path, index_copy):
         from patapsco_spark.operators.retrieve import more_like_this
 
-        idx = _build(spark, tmp_path / "idx")
+        idx = _build(index_copy, spark, tmp_path / "idx")
         like = "stream stream window window filter filter scan scan"
         # cap at 1 informative term → ranking must equal a 1-term query
         got = more_like_this(spark, idx, like, CFG, min_tf=2, min_df=1,
@@ -107,8 +112,8 @@ class TestMoreLikeThis:
 
 
 class TestTotalHitCount:
-    def test_counts_match_unbounded_search(self, spark, tmp_path):
-        idx = _build(spark, tmp_path / "idx")
+    def test_counts_match_unbounded_search(self, spark, tmp_path, index_copy):
+        idx = _build(index_copy, spark, tmp_path / "idx")
         plans = process_queries(
             [("a", "stream"), ("b", "probe"), ("c", "nosuchterm")], CFG,
             mode="plain")
@@ -122,10 +127,11 @@ class TestTotalHitCount:
         assert counts == want  # zero-match query omitted from both
         assert "c" not in counts
 
-    def test_count_respects_boolean_and_deletes(self, spark, tmp_path):
+    def test_count_respects_boolean_and_deletes(self, spark, tmp_path,
+                                                index_copy):
         from patapsco_spark.operators.deletes import delete_docs
 
-        idx = _build(spark, tmp_path / "idx")
+        idx = _build(index_copy, spark, tmp_path / "idx")
         plans = process_queries([("q", "+stream -filter")], CFG,
                                 mode="boolean")
         n0 = search(spark, idx, plans, RetrieveConfig(),
@@ -136,10 +142,10 @@ class TestTotalHitCount:
                      count_only=True).collect()
         assert got == []  # the only match is tombstoned
 
-    def test_count_schema_on_empty_terms(self, spark, tmp_path):
+    def test_count_schema_on_empty_terms(self, spark, tmp_path, index_copy):
         """Review fix: the empty-terms early return must keep the count
         contract's (query_id, total_hits) schema."""
-        idx = _build(spark, tmp_path / "idx")
+        idx = _build(index_copy, spark, tmp_path / "idx")
         plans = process_queries([("q", "")], CFG, mode="plain")
         df = search(spark, idx, plans, RetrieveConfig(), count_only=True)
         assert df.columns == ["query_id", "total_hits"]

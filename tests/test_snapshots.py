@@ -24,14 +24,18 @@ def _hits(spark, idx, q):
     return sorted((r["doc_id"], r["rank"]) for r in res.collect())
 
 
-@pytest.fixture()
-def repo(spark, tmp_path):
-    idx, repo = str(tmp_path / "idx"), str(tmp_path / "repo")
+def _build(spark, idx):
     docs = spark.createDataFrame(
         [(f"d{i}", f"alpha beta doc{i} body", "eng") for i in range(6)],
         "id string, text string, lang string")
     build_index(spark, docs, idx, IndexConfig(text=RAW, num_shards=2))
-    return idx, repo
+
+
+@pytest.fixture()
+def repo(spark, tmp_path, index_copy):
+    idx = index_copy("snapshots", tmp_path / "idx",
+                     lambda p: _build(spark, p))
+    return idx, str(tmp_path / "repo")
 
 
 class TestSnapshots:

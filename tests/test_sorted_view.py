@@ -24,9 +24,7 @@ RAW = TextConfig(stem=None, stopwords=None, lowercase=True)
 N = 37  # odd, spans blocks at block_size 4 and both shards
 
 
-@pytest.fixture()
-def sv_index(spark, tmp_path):
-    path = str(tmp_path / "idx")
+def _build_sv_index(spark, path):
     docs = [(f"d{i:03d}", f"word{i % 5} text body", "eng")
             for i in range(N)]
     df = spark.createDataFrame(docs, "id string, text string, lang string")
@@ -37,7 +35,13 @@ def sv_index(spark, tmp_path):
         "id string, v double")
     build_value_sidecar(spark, path, vals, "v", id_col="id", value_col="v")
     build_sorted_view(spark, path, "v", ascending=False, block_size=4)
-    return path
+
+
+@pytest.fixture()
+def sv_index(spark, tmp_path, index_copy):
+    # each test owns a copy: some delete docs, add a view or edit a manifest
+    return index_copy("sorted_view", tmp_path / "idx",
+                      lambda p: _build_sv_index(spark, p))
 
 
 def _brute(desc=True, drop=(), lo=None, hi=None):

@@ -19,6 +19,14 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "id string, text string, lang string")
 
 
+def _base(index_copy, spark, path, rows, **kw):
+    """The test's own copy of the index over ``rows`` (built once)."""
+    key = ("streaming", tuple(rows), tuple(sorted(kw.items())))
+    return index_copy(key, path, lambda p: build_index(
+        spark, _docs(spark, rows), p, IndexConfig(text=CFG, **kw),
+        resume=False))
+
+
 class TestAppendBatch:
     def test_append_extends_results(self, spark, tmp_path):
         idx = str(tmp_path / "idx")
@@ -38,10 +46,9 @@ class TestAppendBatch:
         ids = {r.doc_id for r in res.collect()}
         assert ids == {"a1", "b1"}  # old and new docs both retrievable
 
-    def test_epoch_idempotence(self, spark, tmp_path):
-        idx = str(tmp_path / "idx2")
-        build_index(spark, _docs(spark, [("a1", "x y", "eng")]), idx,
-                    IndexConfig(text=CFG, num_shards=1), resume=False)
+    def test_epoch_idempotence(self, spark, tmp_path, index_copy):
+        idx = _base(index_copy, spark, tmp_path / "idx2",
+                    [("a1", "x y", "eng")], num_shards=1)
         batch = _docs(spark, [("b1", "x z", "eng")])
         m1 = append_batch(spark, batch, idx, IndexConfig(text=CFG), epoch_id=7)
         m2 = append_batch(spark, batch, idx, IndexConfig(text=CFG), epoch_id=7)
@@ -64,13 +71,12 @@ class TestAppendBatch:
                            RetrieveConfig(k=10), text_cfg=CFG, mode="boolean")
         assert {r.doc_id for r in res.collect()} == {"a1", "b1"}
 
-    def test_old_layout_append_refused(self, spark, tmp_path):
+    def test_old_layout_append_refused(self, spark, tmp_path, index_copy):
         """Appending to a pre-format-4 index would write partition dirs
         beside flat parquet and corrupt later reads — must refuse."""
         from patapsco_spark.plans import manifest as mf
-        idx = str(tmp_path / "idxold")
-        build_index(spark, _docs(spark, [("a1", "x y", "eng")]), idx,
-                    IndexConfig(text=CFG, num_shards=1), resume=False)
+        idx = _base(index_copy, spark, tmp_path / "idxold",
+                    [("a1", "x y", "eng")], num_shards=1)
         man = mf.read_manifest(idx)
         doc = dict(man["config"], postings_format=3)
         mf.write_manifest(idx, "index", doc)
@@ -102,17 +108,16 @@ class TestAppendBatch:
                [(r.doc_id, r.score) for r in after]
 
     def test_orphan_shards_above_range_not_folded_into_delta(
-            self, spark, tmp_path):
+            self, spark, tmp_path, index_copy):
         """A LARGER append that crashes pre-manifest leaves orphan postings
         shards ABOVE a later smaller append's range; the smaller append's
         committed seg delta must not sweep them in (regression: the delta
         scan had only a lower shard bound, so the orphan's df/cf poisoned
         the committed stats and skewed idf for every query)."""
         import shutil
-        idx = str(tmp_path / "idx5")
-        build_index(spark, _docs(spark, [
-            ("a1", "alpha beta", "eng"), ("a2", "beta gamma", "eng")]), idx,
-            IndexConfig(text=CFG, num_shards=1), resume=False)
+        idx = _base(index_copy, spark, tmp_path / "idx5", [
+            ("a1", "alpha beta", "eng"), ("a2", "beta gamma", "eng")],
+            num_shards=1)
         pre = tmp_path / "manifest_pre5.json"
         shutil.copy(f"{idx}/_manifest.json", pre)
         # crashed larger run: 3 docs at docs_per_shard=2 -> shards 1 AND 2
@@ -143,17 +148,17 @@ class TestAppendBatch:
         assert len(docids) == len(set(docids)) == 3
 
 
-    def test_partial_failure_replay_no_duplicates(self, spark, tmp_path):
+    def test_partial_failure_replay_no_duplicates(self, spark, tmp_path,
+                                                  index_copy):
         """Exactly-once under partial failure: simulate a crash AFTER the
         table appends but BEFORE the manifest commit by reverting the
         manifest to its pre-append state, then replaying the same epoch.
         The replay must overwrite the orphaned shard/seg partitions, not
         append next to them."""
         import shutil
-        idx = str(tmp_path / "idx4")
-        build_index(spark, _docs(spark, [
-            ("a1", "alpha beta", "eng"), ("a2", "beta gamma", "eng")]), idx,
-            IndexConfig(text=CFG, num_shards=1), resume=False)
+        idx = _base(index_copy, spark, tmp_path / "idx4", [
+            ("a1", "alpha beta", "eng"), ("a2", "beta gamma", "eng")],
+            num_shards=1)
         pre = tmp_path / "manifest_pre.json"
         shutil.copy(f"{idx}/_manifest.json", pre)
 
@@ -403,20 +408,31 @@ class TestCompaction:
     retrieval results; shard dirs and stats segments collapse; appends keep
     working on the compacted generation."""
 
-    def _build_with_appends(self, spark, idx, n_appends=4,
-                            docs_per_shard=None, positions=False):
-        from patapsco_spark.config import IndexConfig
+    def _build_with_appends(self, spark, idx, index_copy, n_appends=4,
+                            positions=False):
         kw = dict(text=CFG, num_shards=2, positions=positions)
-        build_index(spark, _docs(spark, [
-            ("a1", "stream window join red fox", "eng"),
-            ("a2", "filter scan table stream", "eng"),
-            ("a3", "red fox runs fast", "eng")]), idx,
-            IndexConfig(**kw), resume=False)
-        for e in range(n_appends):
+
+        def append(path, e):
             append_batch(spark, _docs(spark, [
                 (f"b{e}_1", f"stream epoch{e} window red", "eng"),
-                (f"b{e}_2", f"vector epoch{e} fox probe", "eng")]), idx,
+                (f"b{e}_2", f"vector epoch{e} fox probe", "eng")]), path,
                 IndexConfig(**kw), epoch_id=e)
+
+        def build(path, n):
+            build_index(spark, _docs(spark, [
+                ("a1", "stream window join red fox", "eng"),
+                ("a2", "filter scan table stream", "eng"),
+                ("a3", "red fox runs fast", "eng")]), path,
+                IndexConfig(**kw), resume=False)
+            for e in range(n):
+                append(path, e)
+
+        # the build and the first two appends are shared; the rest run here
+        shared = min(n_appends, 2)
+        index_copy(("compaction", positions, shared), idx,
+                   lambda p: build(p, shared))
+        for e in range(shared, n_appends):
+            append(idx, e)
 
     @staticmethod
     def _results(spark, idx, queries):
@@ -425,13 +441,14 @@ class TestCompaction:
         return sorted((r.query_id, r.doc_id, r["rank"], round(r.score, 12))
                       for r in res.collect())
 
-    def test_compact_preserves_results_and_bounds_layout(self, spark, tmp_path):
+    def test_compact_preserves_results_and_bounds_layout(self, spark, tmp_path,
+                                                         index_copy):
         import os
         from patapsco_spark.plans import manifest as mf
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "cidx")
-        self._build_with_appends(spark, idx, n_appends=4)
+        self._build_with_appends(spark, idx, index_copy, n_appends=4)
         queries = [("q1", "stream red"), ("q2", "fox"), ("q3", "epoch2"),
                    ("q4", "vector probe window")]
         before = self._results(spark, idx, queries)
@@ -461,11 +478,13 @@ class TestCompaction:
         assert meta["total_tf"] == pre["total_tf"]
         assert meta["avgdl"] == pre["avgdl"]
 
-    def test_compact_positions_index_keeps_phrases(self, spark, tmp_path):
+    def test_compact_positions_index_keeps_phrases(self, spark, tmp_path,
+                                                   index_copy):
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "cidxp")
-        self._build_with_appends(spark, idx, n_appends=3, positions=True)
+        self._build_with_appends(spark, idx, index_copy, n_appends=3,
+                                 positions=True)
         q = [("q", '"red fox"')]
         before = sorted((r.doc_id, round(r.score, 12)) for r in search_texts(
             spark, idx, q, RetrieveConfig(k=50), text_cfg=CFG,
@@ -476,11 +495,12 @@ class TestCompaction:
             mode="boolean").collect())
         assert after == before and len(before) >= 2
 
-    def test_append_after_compact_and_recompact(self, spark, tmp_path):
+    def test_append_after_compact_and_recompact(self, spark, tmp_path,
+                                                index_copy):
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "cidx2")
-        self._build_with_appends(spark, idx, n_appends=2)
+        self._build_with_appends(spark, idx, index_copy, n_appends=2)
         compact_index(spark, idx)
         meta = append_batch(spark, _docs(spark, [
             ("c1", "stream after compact", "eng")]), idx,
@@ -509,19 +529,29 @@ class TestTieredCompaction:
     QUERIES = [("q1", "stream red"), ("q2", "fox"), ("q3", "tail1"),
                ("q4", "base word probe")]
 
-    def _build(self, spark, idx, n_appends=4):
+    def _build(self, spark, idx, index_copy, n_appends=4):
         # base: 4 docs / 2 full shards (dps=2); appends: 1 doc each → each
         # burns a whole shard range at 50% fill — the tiered target
-        build_index(spark, _docs(spark, [
-            ("a1", "stream window red fox", "eng"),
-            ("a2", "filter scan base word", "eng"),
-            ("a3", "red fox runs fast", "eng"),
-            ("a4", "probe vector base stream", "eng")]), idx,
-            IndexConfig(text=CFG, num_shards=2), resume=False)
-        for e in range(n_appends):
+        def append(path, e):
             append_batch(spark, _docs(spark, [
-                (f"t{e}", f"stream tail{e} red probe", "eng")]), idx,
+                (f"t{e}", f"stream tail{e} red probe", "eng")]), path,
                 IndexConfig(text=CFG), epoch_id=e)
+
+        def build(path, n):
+            build_index(spark, _docs(spark, [
+                ("a1", "stream window red fox", "eng"),
+                ("a2", "filter scan base word", "eng"),
+                ("a3", "red fox runs fast", "eng"),
+                ("a4", "probe vector base stream", "eng")]), path,
+                IndexConfig(text=CFG, num_shards=2), resume=False)
+            for e in range(n):
+                append(path, e)
+
+        # the build and the first three appends are shared; the rest run here
+        shared = min(n_appends, 3)
+        index_copy(("tiered", shared), idx, lambda p: build(p, shared))
+        for e in range(shared, n_appends):
+            append(idx, e)
 
     @staticmethod
     def _snapshot_files(root):
@@ -542,13 +572,13 @@ class TestTieredCompaction:
                       for r in res.collect())
 
     def test_tiered_keeps_base_untouched_and_results_identical(
-            self, spark, tmp_path):
+            self, spark, tmp_path, index_copy):
         import os
         from patapsco_spark.plans import manifest as mf
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "tidx")
-        self._build(spark, idx, n_appends=4)
+        self._build(spark, idx, index_copy, n_appends=4)
         before = self._results(spark, idx, self.QUERIES)
         pre = mf.read_manifest(idx)["config"]
         dps = int(pre["docs_per_shard"])
@@ -586,26 +616,22 @@ class TestTieredCompaction:
         assert segs == {f"seg={meta['stats_base']}"}
         assert meta["stats_base"] == 6
 
-    def test_tiered_noop_when_all_filled(self, spark, tmp_path):
+    def test_tiered_noop_when_all_filled(self, spark, tmp_path, index_copy):
         from patapsco_spark.plans import manifest as mf
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "tidx2")
-        build_index(spark, _docs(spark, [
-            ("a1", "stream window red fox", "eng"),
-            ("a2", "filter scan base word", "eng"),
-            ("a3", "red fox runs fast", "eng"),
-            ("a4", "probe vector base stream", "eng")]), idx,
-            IndexConfig(text=CFG, num_shards=2), resume=False)
+        self._build(spark, idx, index_copy, n_appends=0)
         pre = mf.read_manifest(idx)["config"]
         meta = compact_index(spark, idx, mode="tiered", fill_threshold=0.5)
         assert meta == pre  # every shard full — nothing rewritten
 
-    def test_append_and_full_compact_after_tiered(self, spark, tmp_path):
+    def test_append_and_full_compact_after_tiered(self, spark, tmp_path,
+                                                  index_copy):
         from patapsco_spark.streaming.incremental import compact_index
 
         idx = str(tmp_path / "tidx3")
-        self._build(spark, idx, n_appends=3)
+        self._build(spark, idx, index_copy, n_appends=3)
         compact_index(spark, idx, mode="tiered", fill_threshold=0.5)
         meta = append_batch(spark, _docs(spark, [
             ("z1", "stream after tiered", "eng"),
