@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .queryparse import iter_term_clauses
-from .retrieve import _TermHandle, load_index_meta, process_queries
+from .retrieve import _decode_rows, load_index_meta, process_queries
 from ..plans.pqread import read_parquet
 
 _TF_SCHEMA = "term string, docid long, tf int, dlq int"
@@ -60,8 +60,7 @@ _TF_SCHEMA = "term string, docid long, tf int, dlq int"
 def _make_tf_kernel(docs_per_shard: int, deleted=None):
     """Cogrouped (postings × norms_packed) kernel: full decode of every
     posting of the (already In-filtered) terms → (term, docid, tf, dlq).
-    docid is GLOBAL (shard·docs_per_shard + local); dlq comes from the
-    shard's packed norm-byte blob, tombstoned positions are masked out."""
+    dlq comes from the shard's packed norm-byte blob."""
 
     def kernel(key, posts_pdf: pd.DataFrame,
                packed_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -78,33 +77,16 @@ def _make_tf_kernel(docs_per_shard: int, deleted=None):
             raise ValueError(
                 f"shard {key[0]}: postings present but norms_packed missing")
         from ..functions.smallfloat import byte4_to_int
-        shard = int(key[0])
-        base = shard * docs_per_shard
+        got = _decode_rows(posts_pdf, docs_per_shard, deleted)
+        if got is None:
+            return empty
+        terms, _shards, docid, tfs = got
+        base = int(key[0]) * docs_per_shard
         codes = np.frombuffer(bytes(packed_pdf["codes"].iloc[0]),
                               dtype=np.uint8)
         dlq_arr = byte4_to_int(codes).astype(np.int32)
-        dead = None if deleted is None else deleted.get(shard)
-
-        terms, docids, tfs = [], [], []
-        for row in posts_pdf.itertuples(index=False):
-            h = _TermHandle.from_row(row, base)
-            d, t = h.decode(np.arange(len(h.block_off), dtype=np.int64))
-            if dead is not None and len(dead):
-                keep = ~np.isin(d - base, dead)
-                d, t = d[keep], t[keep]
-            if len(d):
-                terms.append(np.full(len(d), row.term, dtype=object))
-                docids.append(d)
-                tfs.append(t)
-        if not terms:
-            return empty
-        docid = np.concatenate(docids)
-        return pd.DataFrame({
-            "term": np.concatenate(terms),
-            "docid": docid,
-            "tf": np.concatenate(tfs).astype(np.int32),
-            "dlq": dlq_arr[docid - base],
-        })
+        return pd.DataFrame({"term": terms, "docid": docid, "tf": tfs,
+                             "dlq": dlq_arr[docid - base]})
 
     return kernel
 

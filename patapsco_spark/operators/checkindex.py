@@ -66,7 +66,7 @@ def _sample(df: DataFrame, cols: list[str]) -> list:
 def check_index(spark: SparkSession, index_path: str, deep: bool = False,
                 raise_on_error: bool = False) -> dict:
     from .deletes import read_tombstones
-    from .indexer import live_shard_pred, read_term_stats
+    from .indexer import float32_avgdl, live_shard_pred, read_term_stats
 
     report: dict = {}
 
@@ -116,7 +116,7 @@ def check_index(spark: SparkSession, index_path: str, deep: bool = False,
 
     tot = per.agg(F.sum("n").alias("docs"), F.sum("tf").alias("tf")).first()
     got_docs, got_tf = int(tot["docs"] or 0), int(tot["tf"] or 0)
-    want_avgdl = float(np.float32(got_tf / got_docs)) if got_docs else 0.0
+    want_avgdl = float32_avgdl(got_tf, got_docs)
     report["global_stats"] = {
         "ok": (got_docs == int(meta["num_docs"])
                and got_tf == int(meta["total_tf"])

@@ -40,29 +40,12 @@ from pyspark.sql import functions as F
 
 from ..config import RetrieveConfig, TextConfig
 from ..plans import manifest as mf
+from .indexer import pack_shard_blob
 from .queryparse import MUST, MUST_NOT, QueryPlan, iter_term_clauses
 from .retrieve import _TermHandle, load_index_meta, process_queries
 from ..plans.pqread import read_parquet
 
 _MISSING = -1  # code for docs without an attribute row — never counted
-
-
-def _pack_codes(docs_per_shard: int):
-    """(shard, docid, code) group → one row with the shard's int32 blob.
-    Same shape as indexer._pack_norms; docs the keys frame misses stay
-    ``_MISSING``."""
-
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        base = shard * docs_per_shard
-        docids = pdf["docid"].to_numpy()
-        size = int(docids.max()) - base + 1
-        codes = np.full(size, _MISSING, dtype=np.int32)
-        codes[docids - base] = pdf["code"].to_numpy().astype(np.int32)
-        return pd.DataFrame({"shard": [shard], "base": [base],
-                             "n": [len(pdf)], "codes": [codes.tobytes()]})
-
-    return pack
 
 
 def build_facet_sidecar(spark: SparkSession, index_path: str,
@@ -99,8 +82,9 @@ def build_facet_sidecar(spark: SparkSession, index_path: str,
              .join(F.broadcast(dict_df), "key", "left")
              .select("shard", "docid",
                      F.coalesce("code", F.lit(_MISSING)).alias("code")))
+    # docs the keys frame misses stay _MISSING
     packed = coded.groupBy("shard").applyInPandas(
-        _pack_codes(docs_per_shard),
+        pack_shard_blob(docs_per_shard, "code", np.int32, _MISSING),
         schema="shard int, base long, n long, codes binary")
     root = f"{index_path}/facets/{name}"
     (packed.write.mode("overwrite").partitionBy("shard")
@@ -359,26 +343,6 @@ def facet_counts_texts(spark: SparkSession, index_path: str,
                         dv_filter=dv_filter)
 
 
-def _pack_values(docs_per_shard: int):
-    """(shard, docid, value) group → one float64 blob row per shard; docs
-    the values frame misses stay NaN (the missing marker)."""
-
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        base = shard * docs_per_shard
-        docids = pdf["docid"].to_numpy()
-        size = int(docids.max()) - base + 1
-        vals = np.full(size, np.nan, dtype=np.float64)
-        have = pdf["value"].notna().to_numpy()
-        vals[docids[have] - base] = pdf["value"].to_numpy(
-            dtype=np.float64)[have]
-        return pd.DataFrame({"shard": [shard], "base": [base],
-                             "n": [int(have.sum())],
-                             "values": [vals.tobytes()]})
-
-    return pack
-
-
 def build_value_sidecar(spark: SparkSession, index_path: str,
                         values: DataFrame, name: str,
                         id_col: str = "id", value_col: str = "value") -> None:
@@ -399,7 +363,8 @@ def build_value_sidecar(spark: SparkSession, index_path: str,
     packed = (norms.join(vdf, "id", "left")
               .select("shard", "docid", "value")
               .groupBy("shard")
-              .applyInPandas(_pack_values(docs_per_shard),
+              .applyInPandas(pack_shard_blob(docs_per_shard, "value",
+                                             np.float64, np.nan, "values"),
                              schema="shard int, base long, n long, "
                                     "values binary"))
     root = f"{index_path}/doc_values/{name}"

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,10 +41,9 @@ from .retrieve import load_index_meta, process_queries, search
 def combined_stats(spark: SparkSession, index_paths: Sequence[str],
                    terms: Iterable[str]) -> dict:
     """Global (num_docs, total_tf, avgdl, df_map) across the indexes.
-    avgdl follows the indexer's convention: float64 ratio rounded through
-    float32 (indexer.py meta) so a merged index built from the same docs
-    would publish the same value."""
-    from .indexer import read_term_stats
+    avgdl follows the indexer's rule (indexer.float32_avgdl) so a merged
+    index built from the same docs would publish the same value."""
+    from .indexer import float32_avgdl, read_term_stats
 
     terms = sorted(set(terms))
     num_docs = 0
@@ -66,8 +64,8 @@ def combined_stats(spark: SparkSession, index_paths: Sequence[str],
             cur = df_map.setdefault(r["term"], [0, 0])
             cur[0] += int(r["df"])
             cur[1] += int(r["cf"])
-    avgdl = float(np.float32(total_tf / num_docs)) if num_docs else 0.0
-    return {"num_docs": num_docs, "total_tf": total_tf, "avgdl": avgdl,
+    return {"num_docs": num_docs, "total_tf": total_tf,
+            "avgdl": float32_avgdl(total_tf, num_docs),
             "df_map": {t: (df, cf) for t, (df, cf) in df_map.items()}}
 
 

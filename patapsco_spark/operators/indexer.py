@@ -4,12 +4,20 @@ whose physical work happens inside opaque Lucene.
 
 Layout written under ``index_path``:
 
-    analyzed/   (id, lang, terms, dl[, original_text]) range-partitioned by id
-    norms/      shard=K/ (docid, id, dl, norm)        Lucene norm byte per doc
-    postings/   shard=K/ (term, df, cf, max_tf, postings, block_last,
-                          block_off, block_gap_len)
-    term_stats/ (term, df, cf)                        global df/cf per term
-    manifest.json                                     stats + lineage + config
+    analyzed/     (id, lang, terms, dl[, term_pos][, original_text])
+                  range-partitioned by id
+    norms/        shard=K/ (docid, id, dl)       one row per doc
+    norms_packed/ shard=K/ (base, n, codes)      the shard's norm-byte blob
+    postings/     shard=K/ (term, df, cf, max_tf, postings, block_last,
+                            block_off, block_gap_len)
+    positions/    shard=K/ (term, docid, positions)   positions builds only
+    term_stats/   seg=S/ (term, df, cf)          additive df/cf segments
+    manifest.json                                stats + lineage + config
+
+One shard writer: the ``write_*`` functions below are the only code that
+lays a generation of shards out on disk. A build writes whole tables; an
+append or a compaction (streaming.incremental) writes its own shard range
+through the same functions with dynamic partition overwrite.
 
 Design notes (100 TB thinking):
 
@@ -25,9 +33,10 @@ Design notes (100 TB thinking):
   compute per-file offsets from per-file counts (a columnar count, no data
   movement) and docid = file_offset + row_number within file. This is the
   one global sort the engine pays at build time.
-- **Map-side tf counting**: term frequencies are computed inside the Arrow
-  batch kernel (one (term,docid,tf) row per *distinct* term per doc),
-  so the shuffle moves per-doc term counts, not the raw token stream.
+- **Map-side tf counting**: term frequencies are computed per doc in
+  Catalyst (:func:`emit_tf_catalyst`, one (term, docid, tf) row per
+  *distinct* term per doc), so the shuffle moves per-doc term counts, not
+  the raw token stream.
 - **Compression**: postings are delta-gapped varbyte blobs in independently
   decodable blocks of ``block_size`` postings, each fenced by its last
   docid (``block_last``) and located by ``block_off``/``block_gap_len``.
@@ -44,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..functions.analyze import analyze_documents
+from ..functions.analyze import analyze_documents, catalyst_fast_eligible
 from ..functions.codec import block_meta, encode_postings_blocked
 from ..plans import manifest as mf
 from ..plans.pqread import read_parquet
@@ -81,7 +90,7 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
     built_any = False  # did THIS call write any stage? (root-manifest gate)
     if not (resume and mf.is_complete(analyzed_path, "analyzed", cfg_doc)):
         built_any = True
-        n_parts = _pick_partitions(spark, pages, cfg)
+        n_parts = cfg.num_shards or max(spark.sparkContext.defaultParallelism, 4)
         # the analysis kernel parallelizes per input partition — a scan that
         # packed many small files into few partitions (maxPartitionBytes)
         # would serialize the CPU-heavy stage, so widen it explicitly.
@@ -91,49 +100,18 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
         from ..partitioning import widen_for_kernel
         pages = widen_for_kernel(pages, max(n_parts,
                                             spark.sparkContext.defaultParallelism))
-        analyzed = analyze_documents(pages, cfg.text, id_col=id_col,
-                                     text_col=text_col, lang_col=lang_col,
-                                     batch_transform=batch_transform,
-                                     extra_cols=transform_cols,
-                                     with_positions=bool(cfg.positions),
-                                     store_raw=cfg.store_raw)
-        from ..functions.analyze import catalyst_fast_eligible
-        if catalyst_fast_eligible(cfg.text) and batch_transform is None:
-            # Catalyst-fast chains: the range sampler's `id` projection
-            # prunes the analysis expressions away (the slow Arrow branch
-            # only touches the non-ASCII minority), so sampling the
-            # analyzed plan directly is one cheap scan — skip the
-            # _analyzed_stage write + readback double-pass entirely and
-            # write the range-partitioned layout in a single job.
-            (analyzed.repartitionByRange(n_parts, "id")
-                     .sortWithinPartitions("id")
-                     .write.mode("overwrite").parquet(analyzed_path))
-        else:
-            # materialize BEFORE range partitioning: repartitionByRange
-            # runs a sampling job over its child, which would re-execute
-            # the whole Python analysis chain a second time. Staged
-            # through parquet, the sample pass is a column-pruned scan of
-            # `id` only.
-            stage_path = f"{index_path}/_analyzed_stage"
-            analyzed.write.mode("overwrite").parquet(stage_path)
-            (read_parquet(spark, stage_path)
-                  .repartitionByRange(n_parts, "id")
-                  .sortWithinPartitions("id")
-                  .write.mode("overwrite").parquet(analyzed_path))
-            _delete_path(spark, stage_path)
-        lineage = _per_file_stats(spark, analyzed_path, "id")
+        lineage = write_analyzed(spark, pages, analyzed_path, cfg.text,
+                                 n_parts, positions=bool(cfg.positions),
+                                 store_raw=cfg.store_raw, id_col=id_col,
+                                 text_col=text_col, lang_col=lang_col,
+                                 batch_transform=batch_transform,
+                                 transform_cols=transform_cols)
         mf.write_manifest(analyzed_path, "analyzed", cfg_doc,
                           metrics={"files": len(lineage),
                                    "rows": sum(r["rows"] for r in lineage)},
                           lineage=lineage)
 
-    man = mf.read_manifest(analyzed_path)
-    lineage = sorted(man["lineage"], key=lambda r: (r["min_key"] is None, r["min_key"], r["file"]))
-    offsets, total = {}, 0
-    for rec in lineage:
-        offsets[rec["file"]] = total
-        total += rec["rows"]
-    num_docs = total
+    offsets, num_docs = docid_offsets(mf.read_manifest(analyzed_path)["lineage"])
     num_shards = cfg.num_shards or max(1, math.ceil(num_docs / cfg.target_docs_per_shard))
     docs_per_shard = max(1, math.ceil(num_docs / num_shards))
 
@@ -152,56 +130,16 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
 
     if not (resume and mf.is_complete(postings_path, "postings", build_cfg)):
         built_any = True
-        analyzed_df = read_parquet(spark, analyzed_path)
-        docided = _assign_docids(analyzed_df, offsets, docs_per_shard)
-
-        # norms: one row per doc; the scorer derives the Lucene norm byte by
-        # quantizing dl (storing dl loses nothing — quantization is
-        # deterministic — and keeps the table engine-agnostic)
-        norms = docided.select("shard", "docid", "id", "dl")
-        (norms.repartition(num_shards, "shard")
-              .sortWithinPartitions("docid")
-              .write.mode("overwrite").partitionBy("shard").parquet(norms_path))
+        docided = _assign_docids(read_parquet(spark, analyzed_path), offsets,
+                                 docs_per_shard)
+        write_norms(docided, norms_path, num_shards)
         norm_lineage = _per_file_stats(spark, norms_path, "docid")
         mf.write_manifest(norms_path, "norms", build_cfg,
                           metrics={"rows": sum(r["rows"] for r in norm_lineage)},
                           lineage=norm_lineage)
-
-        # norms_packed: ONE row per shard holding every doc's Lucene norm
-        # byte as a dense blob (docid-indexed from the shard base). The
-        # query path reads these tiny blobs instead of scanning the full
-        # norms table — at 10^9 docs that's ~250 KB per matched shard vs a
-        # multi-GB columnar scan per query. External ids stay in norms/ and
-        # are joined for the final top-k only.
-        # partitioned by shard (one tiny blob row per shard directory) so a
-        # streaming append can dynamic-partition-overwrite exactly its own
-        # new shards — the idempotent-replay unit (see streaming/incremental)
-        packed = (read_parquet(spark, norms_path)
-                  .groupBy("shard")
-                  .applyInPandas(_pack_norms(docs_per_shard),
-                                 schema="shard int, base long, n long, codes binary"))
-        (packed.write.mode("overwrite").partitionBy("shard")
-               .parquet(f"{index_path}/norms_packed"))
+        write_norms_packed(spark, index_path, docs_per_shard)
         mf.write_manifest(f"{index_path}/norms_packed", "norms_packed", build_cfg)
 
-        # per-doc term frequencies — pure Catalyst (round 5): sort each
-        # doc's term array, find run boundaries with HOFs, explode one row
-        # per distinct term. Replaces the Arrow-batched _emit_tf kernel: the
-        # whole token stream used to cross JVM→Python→JVM here — on the
-        # measured host that IPC is the throughput ceiling, and it burns
-        # cluster memory bandwidth at any scale. _emit_tf remains as the
-        # cross-check reference kernel (tests pin row-identical output).
-        tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "terms"))
-
-        # SPIMI merge: one shuffle keyed on shard; a reducer receives (at
-        # most) one whole shard sorted by (term, docid) and ONE kernel builds
-        # all its terms' postings via sorted-run boundaries — no per-term
-        # pandas groups (a unique-terms corpus would pay per-group overhead
-        # millions of times). Skew is bounded by construction: a head term's
-        # postings within a reducer never exceed docs_per_shard (the shard IS
-        # the salt), and reducer memory = one shard's tf rows — the SPIMI
-        # memory budget, tuned via target_docs_per_shard. Each reducer writes
-        # exactly one shard directory (no small-file explosion).
         # reducer count: when the cluster is wider than the shard count
         # (small builds, local mode), sub-split each shard by a term-hash
         # bucket — every (shard, term)'s rows still land complete in one
@@ -213,58 +151,21 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
         n_red = max(num_shards, spark.sparkContext.defaultParallelism)
         if n_red > num_shards and num_docs < 20000:
             n_red = num_shards
-        if n_red > num_shards:
-            buckets = max(1, (32 * n_red) // num_shards)
-            red_keys = [F.col("shard"),
-                        F.pmod(F.xxhash64("term"), F.lit(buckets))]
-        else:
-            red_keys = [F.col("shard")]
-        postings = (tf_rows
-                    .repartition(n_red, *red_keys)
-                    .sortWithinPartitions("shard", "term", "docid")
-                    .mapInPandas(_make_postings_kernel(cfg.block_size, docs_per_shard),
-                                 schema=POSTINGS_SCHEMA))
-        (postings.write.mode("overwrite").partitionBy("shard").parquet(postings_path))
+        buckets = max(1, (32 * n_red) // num_shards) if n_red > num_shards else 0
+        write_postings(docided, postings_path, n_red, cfg.block_size,
+                       docs_per_shard, buckets=buckets)
         post_lineage = _per_file_stats(spark, postings_path, "term")
         mf.write_manifest(postings_path, "postings", build_cfg,
                           metrics={"terms_x_shards": sum(r["rows"] for r in post_lineage)},
                           lineage=post_lineage)
 
         if cfg.positions:
-            # positions sidecar for exact phrase scoring: one row per
-            # (term, docid) with the term's token offsets — PRE-REMOVAL
-            # stream indices (term_pos) when the analysis chain can drop
-            # stopwords, so phrase matching honors Lucene's position
-            # increments ("data stream" does not match "data the stream").
-            # Same (shard, term) layout discipline as postings/ — shard
-            # partition pruning + term predicate pushdown at phrase-query
-            # time; shard bounds a head term's row count (the shard is the
-            # salt).
-            pcols = [c for c in ("shard", "docid", "terms", "term_pos")
-                     if c in docided.columns]
-            positions = (docided.select(*pcols)
-                         .mapInPandas(_emit_positions,
-                                      schema="shard int, term string, "
-                                             "docid long, positions array<int>"))
-            (positions.repartition(num_shards, "shard")
-                      .sortWithinPartitions("shard", "term", "docid")
-                      .write.mode("overwrite").partitionBy("shard")
-                      .parquet(f"{index_path}/positions"))
+            write_positions(docided, f"{index_path}/positions", num_shards)
             mf.write_manifest(f"{index_path}/positions", "positions", build_cfg)
 
     if not (resume and mf.is_complete(stats_path, "term_stats", build_cfg)):
         built_any = True
-        # term_stats is ADDITIVE-partitioned: seg=-1 holds the base build;
-        # each streaming append adds a seg=<first new shard> delta computed
-        # from its new shards only (no full-postings rescan per micro-batch).
-        # Readers aggregate df/cf across segments (read_term_stats).
-        post_df = read_parquet(spark, postings_path)
-        stats = (post_df.groupBy("term")
-                 .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                 .withColumn("seg", F.lit(-1)))
-        (stats.repartition(max(1, num_shards // 4))
-              .sortWithinPartitions("term")
-              .write.mode("overwrite").partitionBy("seg").parquet(stats_path))
+        write_term_stats(spark, index_path, -1, num_shards)
         mf.write_manifest(stats_path, "term_stats", build_cfg)
 
     # a fully-skipped resume returns the EXISTING root manifest untouched:
@@ -283,15 +184,176 @@ def build_index(spark: SparkSession, pages: DataFrame, index_path: str,
     g = norms_df.agg(F.count("*").alias("n"), F.sum("dl").alias("total_tf")).first()
     total_tf = int(g["total_tf"] or 0)
     doc = dict(build_cfg)
-    doc.update({
-        "num_docs": int(g["n"]),
-        "total_tf": total_tf,
-        # Lucene computes avgFieldLength as a float32 (BM25Similarity)
-        "avgdl": float(np.float32(total_tf / g["n"])) if g["n"] else 0.0,
-    })
+    doc.update({"num_docs": int(g["n"]), "total_tf": total_tf,
+                "avgdl": float32_avgdl(total_tf, int(g["n"]))})
     mf.write_manifest(index_path, "index", doc,
                       metrics={"num_docs": doc["num_docs"], "total_tf": total_tf})
     return mf.read_manifest(index_path)["config"] | {"index_path": index_path}
+
+
+def float32_avgdl(total_tf: int, num_docs: int) -> float:
+    """Lucene computes avgFieldLength as a float32 (BM25Similarity)."""
+    return float(np.float32(total_tf / num_docs)) if num_docs else 0.0
+
+
+def write_shards(df: DataFrame, path: str, dynamic: bool = False,
+                 by: str = "shard") -> None:
+    """Overwrite the ``by``-partitioned table at ``path`` with ``df``:
+    wholly (static), or only the partitions ``df`` holds (dynamic)."""
+    w = df.write.mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy(by).parquet(path)
+
+
+def write_analyzed(spark: SparkSession, docs: DataFrame, path: str,
+                   text_cfg, n_parts: int, *, positions: bool,
+                   store_raw: bool = True, id_col: str = "id",
+                   text_col: str = "text", lang_col: str | None = "lang",
+                   batch_transform=None,
+                   transform_cols: tuple[str, ...] = ()) -> list[dict]:
+    """Analyze ``docs`` and write them range-partitioned by id and sorted
+    within each file — the docid order (:func:`docid_offsets`). Returns
+    the per-file lineage: rows, min/max id and the files' ``dl`` sum."""
+    analyzed = analyze_documents(docs, text_cfg, id_col=id_col,
+                                 text_col=text_col, lang_col=lang_col,
+                                 batch_transform=batch_transform,
+                                 extra_cols=transform_cols,
+                                 with_positions=positions, store_raw=store_raw)
+    stage = None
+    if not (catalyst_fast_eligible(text_cfg) and batch_transform is None):
+        # materialize BEFORE range partitioning: repartitionByRange runs a
+        # sampling job over its child, which would re-execute the whole
+        # Python analysis chain a second time. Staged through parquet, the
+        # sample pass is a column-pruned scan of `id` only. (Catalyst-fast
+        # chains skip this: the sampler's `id` projection prunes the
+        # analysis expressions away — the slow Arrow branch only touches
+        # the non-ASCII minority — so one job writes the layout.)
+        stage = f"{path.rsplit('/', 1)[0]}/_analyzed_stage"
+        analyzed.write.mode("overwrite").parquet(stage)
+        analyzed = read_parquet(spark, stage)
+    (analyzed.repartitionByRange(n_parts, "id")
+             .sortWithinPartitions("id")
+             .write.mode("overwrite").parquet(path))
+    if stage is not None:
+        _delete_path(spark, stage)
+    return _per_file_stats(spark, path, "id", F.sum("dl").alias("dl"))
+
+
+def docid_offsets(lineage: list[dict], first_docid: int = 0
+                  ) -> tuple[dict[str, int], int]:
+    """Per-file docid offsets of an analyzed batch (files in id order,
+    from ``first_docid``) and its row count."""
+    offsets, rows = {}, 0
+    for rec in sorted(lineage, key=lambda r: (r["min_key"] is None,
+                                              r["min_key"], r["file"])):
+        offsets[rec["file"]] = first_docid + rows
+        rows += rec["rows"]
+    return offsets, rows
+
+
+def write_norms(docided: DataFrame, path: str, n_parts: int,
+                dynamic: bool = False) -> None:
+    """norms: one (docid, id, dl) row per doc, per shard in docid order.
+    The scorer derives the Lucene norm byte by quantizing dl (storing dl
+    loses nothing — quantization is deterministic — and keeps the table
+    engine-agnostic)."""
+    write_shards(docided.select("shard", "docid", "id", "dl")
+                 .repartition(n_parts, "shard").sortWithinPartitions("docid"),
+                 path, dynamic)
+
+
+def write_norms_packed(spark: SparkSession, index_path: str,
+                       docs_per_shard: int, where=None,
+                       dynamic: bool = False) -> None:
+    """norms_packed: ONE row per shard holding every doc's Lucene norm byte
+    as a dense blob (docid-indexed from the shard base), packed from the
+    ``where`` rows of norms/. The query path reads these tiny blobs instead
+    of scanning the full norms table — at 10^9 docs that's ~250 KB per
+    matched shard vs a multi-GB columnar scan per query. External ids stay
+    in norms/ and are joined for the final top-k only."""
+    from ..functions.smallfloat import int_to_byte4
+
+    norms = read_parquet(spark, f"{index_path}/norms")
+    if where is not None:
+        norms = norms.where(where)
+    pack = pack_shard_blob(docs_per_shard, "dl", np.uint8, 0,
+                           encode=int_to_byte4)
+    write_shards(norms.groupBy("shard").applyInPandas(
+                     pack, schema="shard int, base long, n long, codes binary"),
+                 f"{index_path}/norms_packed", dynamic)
+
+
+def encode_postings(tf_rows: DataFrame, n_parts: int, block_size: int,
+                    docs_per_shard: int, buckets: int = 0) -> DataFrame:
+    """(shard, term, docid, tf) rows → postings rows (POSTINGS_SCHEMA).
+
+    SPIMI merge: one shuffle keyed on shard (plus a term-hash bucket of
+    ``buckets`` when > 0); a reducer receives whole (shard, term) runs
+    sorted by (term, docid) and ONE kernel builds all its terms' postings
+    via sorted-run boundaries — no per-term pandas groups. Skew is bounded
+    by construction: a head term's postings within a reducer never exceed
+    docs_per_shard (the shard IS the salt)."""
+    keys = [F.col("shard")]
+    if buckets:
+        keys.append(F.pmod(F.xxhash64("term"), F.lit(buckets)))
+    return (tf_rows.select("shard", "term", "docid", F.col("tf").cast("int"))
+            .repartition(n_parts, *keys)
+            .sortWithinPartitions("shard", "term", "docid")
+            .mapInPandas(_make_postings_kernel(block_size, docs_per_shard),
+                         schema=POSTINGS_SCHEMA))
+
+
+def write_postings(docided: DataFrame, path: str, n_parts: int,
+                   block_size: int, docs_per_shard: int, buckets: int = 0,
+                   dynamic: bool = False) -> None:
+    """postings of analyzed, docided rows: per-doc term frequencies in pure
+    Catalyst (:func:`emit_tf_catalyst`), then :func:`encode_postings`."""
+    tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "terms"))
+    write_shards(encode_postings(tf_rows, n_parts, block_size,
+                                 docs_per_shard, buckets), path, dynamic)
+
+
+def positions_layout(rows: DataFrame, n_parts: int) -> DataFrame:
+    """Same (shard, term) layout discipline as postings/ — shard partition
+    pruning + term predicate pushdown at phrase-query time; the shard
+    bounds a head term's row count."""
+    return (rows.select("shard", "term", "docid", "positions")
+            .repartition(n_parts, "shard")
+            .sortWithinPartitions("shard", "term", "docid"))
+
+
+def write_positions(docided: DataFrame, path: str, n_parts: int,
+                    dynamic: bool = False) -> None:
+    """positions sidecar for exact phrase scoring: one row per (term,
+    docid) with the term's token offsets — PRE-REMOVAL stream indices
+    (term_pos) when the analysis chain can drop stopwords, so phrase
+    matching honors Lucene's position increments ("data stream" does not
+    match "data the stream")."""
+    pcols = [c for c in ("shard", "docid", "terms", "term_pos")
+             if c in docided.columns]
+    rows = docided.select(*pcols).mapInPandas(
+        _emit_positions,
+        schema="shard int, term string, docid long, positions array<int>")
+    write_shards(positions_layout(rows, n_parts), path, dynamic)
+
+
+def write_term_stats(spark: SparkSession, index_path: str, seg: int,
+                     n_shards: int, where=None, dynamic: bool = False) -> None:
+    """One term_stats segment ``seg=<seg>``: (term, df, cf) summed over the
+    ``where`` rows of postings/. term_stats is ADDITIVE-partitioned: seg=-1
+    holds the base build, each append adds a seg=<first new shard> delta
+    from its new shards only, a compaction collapses all into one segment;
+    readers aggregate across segments (:func:`read_term_stats`)."""
+    posts = read_parquet(spark, f"{index_path}/postings")
+    if where is not None:
+        posts = posts.where(where)
+    stats = (posts.groupBy("term")
+             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+             .withColumn("seg", F.lit(seg)))
+    write_shards(stats.repartition(max(1, n_shards // 4))
+                 .sortWithinPartitions("term"),
+                 f"{index_path}/term_stats", dynamic, by="seg")
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
@@ -300,12 +362,6 @@ def _delete_path(spark: SparkSession, path: str) -> None:
     jsc = spark.sparkContext._jsc
     p = jvm.org.apache.hadoop.fs.Path(path)
     p.getFileSystem(jsc.hadoopConfiguration()).delete(p, True)
-
-
-def _pick_partitions(spark: SparkSession, pages: DataFrame, cfg: IndexConfig) -> int:
-    if cfg.num_shards:
-        return cfg.num_shards
-    return max(spark.sparkContext.defaultParallelism, 4)
 
 
 def emit_tf_catalyst(docided: DataFrame) -> DataFrame:
@@ -389,19 +445,23 @@ def _emit_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield grp[["shard", "term", "docid", "positions"]]
 
 
-def _pack_norms(docs_per_shard: int):
-    """(shard, docid, dl) group → one row with the shard's norm-byte blob."""
-    from ..functions.smallfloat import int_to_byte4
+def pack_shard_blob(docs_per_shard: int, col: str, dtype, fill,
+                    blob: str = "codes", encode=None):
+    """(shard, docid, ``col``) group → the shard's ONE blob row (shard,
+    base, n, ``blob``): the ``encode``d values as a dense ``dtype`` array
+    indexed by docid - base. Docs without a non-NULL value keep ``fill``
+    and are not counted in n."""
 
     def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         base = shard * docs_per_shard
+        have = pdf[col].notna().to_numpy()
         docids = pdf["docid"].to_numpy()
-        size = int(docids.max()) - base + 1
-        codes = np.zeros(size, dtype=np.uint8)
-        codes[docids - base] = int_to_byte4(pdf["dl"].to_numpy())
+        out = np.full(int(docids.max()) - base + 1, fill, dtype=dtype)
+        vals = pdf[col].to_numpy()[have]
+        out[docids[have] - base] = vals if encode is None else encode(vals)
         return pd.DataFrame({"shard": [shard], "base": [base],
-                             "n": [len(pdf)], "codes": [codes.tobytes()]})
+                             "n": [int(have.sum())], blob: [out.tobytes()]})
 
     return pack
 
@@ -535,12 +595,13 @@ def read_term_stats(spark: SparkSession, index_path: str,
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")))
 
 
-def _per_file_stats(spark: SparkSession, path: str, key: str) -> list[dict]:
+def _per_file_stats(spark: SparkSession, path: str, key: str,
+                    *extra) -> list[dict]:
     df = read_parquet(spark, path)
     rows = (df.groupBy(F.input_file_name().alias("file"))
               .agg(F.count("*").alias("rows"),
                    F.min(key).alias("min_key"),
-                   F.max(key).alias("max_key"))
+                   F.max(key).alias("max_key"), *extra)
               .collect())
     return mf.file_lineage([r.asDict() for r in rows])
 

@@ -1565,20 +1565,6 @@ def _pseudo_kind_enabled(kind, meta, scorer, stats_override) -> bool:
     return True
 
 
-def _encode_pseudo(rows, meta):
-    """(term, shard, docid, tf) rows of pseudo-terms → postings rows,
-    through the SAME blocked varbyte kernel as regular postings — the
-    scorer needs no pseudo-term path."""
-    from .indexer import POSTINGS_SCHEMA, _make_postings_kernel
-
-    kernel = _make_postings_kernel(int(meta.get("block_size", 128)),
-                                   int(meta["docs_per_shard"]))
-    return (rows.select("shard", "term", "docid", F.col("tf").cast("int"))
-            .repartition(int(meta["num_shards"]), "shard")
-            .sortWithinPartitions("shard", "term", "docid")
-            .mapInPandas(kernel, schema=POSTINGS_SCHEMA))
-
-
 def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
                           df_map, idf_over, *, meta, live_pred, deleted,
                           num_docs):
@@ -1681,7 +1667,7 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
                     _bm25_idf(num_docs, df)
                     for df in k.idf_dfs(key, df_of, ext.get(k)) if df > 0)
         if stats:
-            parts.append(_encode_pseudo(tf_all, meta))
+            parts.append(tf_all)
 
     syn_name = {}
     for g in sorted(set(syn_groups.values())):
@@ -1691,20 +1677,27 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
             df_map[syn_name[g]] = (max(s[0] for s in member_stats),
                                    sum(s[1] for s in member_stats))
     if syn_name:
-        from .bm25f import term_postings_frame
         memb_df = spark.createDataFrame(
             [(name, w) for g, name in syn_name.items() for w in g],
             "term string, word string")
-        summed = (term_postings_frame(spark, index_path,
-                                      {w for g in syn_name for w in g},
-                                      meta=meta, deleted=deleted)
-                  .withColumnRenamed("term", "word")
+        words = sorted({w for g in syn_name for w in g})
+        posts = (read_parquet(spark, f"{index_path}/postings")
+                 .where(F.col("term").isin(words) & live_pred))
+        dps = int(meta["docs_per_shard"])
+
+        def decode(batches):  # no norms input: the sum drops dlq anyway
+            for pdf in batches:
+                got = _decode_rows(pdf, dps, deleted)
+                if got is not None:
+                    yield pd.DataFrame(dict(zip(("word", "shard", "docid",
+                                                 "tf"), got)))
+
+        summed = (posts.mapInPandas(decode, schema="word string, shard int, "
+                                                   "docid long, tf int")
                   .join(F.broadcast(memb_df), "word")
-                  .withColumn("shard", (F.col("docid") / F.lit(
-                      int(meta["docs_per_shard"]))).cast("int"))
                   .groupBy("term", "shard", "docid")
                   .agg(F.sum("tf").alias("tf")))
-        parts.append(_encode_pseudo(summed, meta))
+        parts.append(summed)
 
     def pseudo_of(c):
         k = kind_of(c)
@@ -1728,10 +1721,15 @@ def _rewrite_pseudo_terms(spark, index_path, plans, kinds, syn_groups,
         return out
 
     plans = [QueryPlan(p.qid, swap(p.clauses), p.mode) for p in plans]
-    posts = None
-    for part in parts:
-        posts = part if posts is None else posts.unionByName(part)
-    return plans, posts
+    if not parts:
+        return plans, None
+    # (term, shard, docid, tf) rows of every pseudo-term → postings rows
+    # through the build's own encode: the scorer needs no pseudo-term path
+    from .indexer import encode_postings
+    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    return plans, encode_postings(rows, int(meta["num_shards"]),
+                                  int(meta.get("block_size", 128)),
+                                  int(meta["docs_per_shard"]))
 
 
 def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
@@ -1773,9 +1771,14 @@ def _make_shard_scorer(plans_payload, df_map, *, scorer, k, k1, b, mu,
     after = after or {}
 
     def kernel(key, posts_pdf: pd.DataFrame, packed_pdf: pd.DataFrame) -> pd.DataFrame:
-        if posts_pdf.empty or packed_pdf.empty:
+        if posts_pdf.empty:
             return _empty_result()
         shard = int(key[0])
+        if packed_pdf.empty:
+            # every shard writes exactly one norms_packed row; scoring
+            # without it would silently drop the shard from the result
+            raise ValueError(f"shard {shard} has postings but no "
+                             "norms_packed row; index is corrupt")
         base = shard * docs_per_shard
         dead = None if deleted is None else deleted.get(shard)
 
@@ -2118,6 +2121,32 @@ class _TermHandle:
                              self.block_gap_len, self.block_last, self.base)
 
 
+def _decode_rows(posts_pdf: pd.DataFrame, docs_per_shard: int,
+                 deleted=None):
+    """Full decode of every postings row (each carries its shard) →
+    (term, shard, docid, tf) arrays, tombstoned docs masked; None when
+    nothing survives. docid is GLOBAL (shard·docs_per_shard + local)."""
+    terms, shards, docids, tfs = [], [], [], []
+    for row in posts_pdf.itertuples(index=False):
+        shard = int(row.shard)
+        base = shard * docs_per_shard
+        h = _TermHandle.from_row(row, base)
+        d, t = h.decode(np.arange(len(h.block_off), dtype=np.int64))
+        dead = None if deleted is None else deleted.get(shard)
+        if dead is not None and len(dead):
+            keep = ~np.isin(d - base, dead)
+            d, t = d[keep], t[keep]
+        if len(d):
+            terms.append(np.full(len(d), row.term, dtype=object))
+            shards.append(np.full(len(d), shard, dtype=np.int32))
+            docids.append(d)
+            tfs.append(t)
+    if not terms:
+        return None
+    return (np.concatenate(terms), np.concatenate(shards),
+            np.concatenate(docids), np.concatenate(tfs).astype(np.int32))
+
+
 def _empty_result() -> pd.DataFrame:
     return pd.DataFrame({
         "query_id": pd.Series(dtype=object),
@@ -2205,16 +2234,12 @@ def explain(spark: SparkSession, index_path: str, plan: QueryPlan,
                              num_shards=int(meta["num_shards"]))
              .where(F.col("term").isin(terms)).collect()}
     posts = (read_parquet(spark, f"{index_path}/postings")
-             .where(live & F.col("term").isin(terms)).collect())
-
-    docs_per_shard = int(meta["docs_per_shard"])
+             .where(live & F.col("term").isin(terms)).toPandas())
+    got = _decode_rows(posts, int(meta["docs_per_shard"]))
     tf_by = {}
-    for row in posts:
-        h = _TermHandle.from_row(row, int(row["shard"]) * docs_per_shard)
-        d, t = h.decode(np.arange(len(h.block_last)))
-        for docid, tf in zip(d, t):
-            if int(docid) in want:
-                tf_by[(row["term"], int(docid))] = int(tf)
+    for t, _s, d, tf in zip(*got) if got is not None else ():
+        if int(d) in want:
+            tf_by[(t, int(d))] = int(tf)
 
     # positional phrase clauses (when the index has a positions sidecar):
     # tf = exact phrase frequency in the doc, idf = Σ member idfs, reported

@@ -31,11 +31,15 @@ live Lucene index between searches. They are maintained INCREMENTALLY from
 the manifest + the batch itself (no full norms/postings rescan per
 micro-batch — at 10^12 docs a per-batch full scan would dwarf the append).
 
-Docid assignment reuses the batch indexer's distributed technique
-(operators/indexer.py _assign_docids): the analyzed batch is staged to
-parquet, range-partitioned by external id, per-file offsets are derived
-from file-lineage counts, and docids are row_numbers WITHIN each file —
-no global single-partition sort, the wide batch sorts in parallel.
+One shard writer: an append and a compaction write every table through
+the batch indexer's table functions (operators/indexer.py ``write_*``,
+``encode_postings``, ``positions_layout``) over their own shard range,
+with dynamic partition overwrite. Docid assignment is the build's: the
+analyzed batch is range-partitioned by external id and written in one
+pass (Catalyst-fast chains; other chains stage it once so the range
+sampler does not re-run the analysis), per-file offsets are derived from
+file-lineage counts, and docids are row_numbers WITHIN each file — no
+global single-partition sort, the wide batch sorts in parallel.
 """
 
 from __future__ import annotations
@@ -47,15 +51,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..functions.analyze import analyze_documents
 from ..operators.indexer import (
-    POSTINGS_SCHEMA,
     _assign_docids,
     _delete_path,
-    _make_postings_kernel,
-    emit_tf_catalyst,
-    _pack_norms,
-    _per_file_stats,
+    docid_offsets,
+    encode_postings,
+    float32_avgdl,
+    live_shard_pred,
+    positions_layout,
+    write_analyzed,
+    write_norms,
+    write_norms_packed,
+    write_positions,
+    write_postings,
+    write_shards,
+    write_term_stats,
 )
 from ..plans import fsio
 from ..plans import manifest as mf
@@ -103,98 +113,46 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_path: str,
         math.ceil(int(meta["num_docs"]) / docs_per_shard) * docs_per_shard
     first_shard = next_docid // docs_per_shard
 
-    # ---- stage the analyzed batch, range-sorted by id (epoch-keyed path:
-    # overwrite mode makes a replay recompute it cleanly) -----------------
+    # ---- the analyzed batch, range-sorted by id (epoch-keyed path:
+    # overwrite mode makes a replay recompute it cleanly). Nothing reads
+    # its raw text: the stage is deleted once the append commits.
     stage = f"{index_path}/_epoch_stage/{first_shard}"
-    analyzed = analyze_documents(docs, cfg.text, id_col=id_col,
-                                 text_col=text_col, lang_col=lang_col,
-                                 with_positions=bool(meta.get("positions")))
-    analyzed.write.mode("overwrite").parquet(f"{stage}/analyzed")
-    n_parts = max(1, spark.sparkContext.defaultParallelism)
-    (read_parquet(spark, f"{stage}/analyzed")
-          .repartitionByRange(n_parts, "id")
-          .sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(f"{stage}/sorted"))
-    lineage = _per_file_stats(spark, f"{stage}/sorted", "id")
-    lineage = sorted(lineage, key=lambda r: (r["min_key"] is None,
-                                             r["min_key"], r["file"]))
-    offsets, batch_rows = {}, 0
-    for rec in lineage:
-        offsets[rec["file"]] = next_docid + batch_rows
-        batch_rows += rec["rows"]
+    lineage = write_analyzed(spark, docs, f"{stage}/analyzed", cfg.text,
+                             max(1, spark.sparkContext.defaultParallelism),
+                             positions=bool(meta.get("positions")),
+                             store_raw=False, id_col=id_col,
+                             text_col=text_col, lang_col=lang_col)
+    offsets, batch_rows = docid_offsets(lineage, next_docid)
     if batch_rows == 0:
         _delete_path(spark, stage)
         return meta
     new_shard_count = math.ceil(batch_rows / docs_per_shard)
-
-    docided = _assign_docids(read_parquet(spark, f"{stage}/sorted"),
+    docided = _assign_docids(read_parquet(spark, f"{stage}/analyzed"),
                              offsets, docs_per_shard)
 
-    # ---- epoch-owned partition writes (dynamic overwrite = replay-safe) --
-    dyn = {"partitionOverwriteMode": "dynamic"}
-    norms = docided.select("shard", "docid", "id", "dl")
-    (norms.repartition(new_shard_count, "shard").sortWithinPartitions("docid")
-          .write.mode("overwrite").options(**dyn).partitionBy("shard")
-          .parquet(f"{index_path}/norms"))
-
-    # pack the NEW shards' norm bytes (query path reads norms_packed);
-    # bound the scan to exactly THIS epoch's shard range — a lower bound
-    # alone would also sweep in orphan shards above our range left by a
-    # LARGER append/compaction that crashed before its manifest commit
+    # ---- epoch-owned partition writes (dynamic overwrite = replay-safe).
+    # The norms pack and the term-stats delta read back exactly THIS
+    # epoch's shard range — a lower bound alone would also sweep in orphan
+    # shards above it left by a LARGER append/compaction that crashed
+    # before its manifest commit, and an orphan in the COMMITTED delta
+    # would skew idf for every query.
     this_epoch = ((F.col("shard") >= first_shard)
                   & (F.col("shard") < first_shard + new_shard_count))
-    new_norms = (read_parquet(spark, f"{index_path}/norms")
-                 .where(this_epoch))
-    (new_norms.groupBy("shard")
-     .applyInPandas(_pack_norms(docs_per_shard),
-                    schema="shard int, base long, n long, codes binary")
-     .write.mode("overwrite").options(**dyn).partitionBy("shard")
-     .parquet(f"{index_path}/norms_packed"))
-
-    tf_rows = emit_tf_catalyst(docided.select("shard", "docid", "terms"))
-    postings = (tf_rows
-                .repartition(new_shard_count, "shard")
-                .sortWithinPartitions("shard", "term", "docid")
-                .mapInPandas(_make_postings_kernel(cfg.block_size, docs_per_shard),
-                             schema=POSTINGS_SCHEMA))
-    (postings.write.mode("overwrite").options(**dyn).partitionBy("shard")
-             .parquet(f"{index_path}/postings"))
-
+    write_norms(docided, f"{index_path}/norms", new_shard_count, dynamic=True)
+    write_norms_packed(spark, index_path, docs_per_shard, where=this_epoch,
+                       dynamic=True)
+    write_postings(docided, f"{index_path}/postings", new_shard_count,
+                   cfg.block_size, docs_per_shard, dynamic=True)
     if meta.get("positions"):
         # positions-enabled index: appended shards must carry the sidecar
         # too, or phrase queries would silently miss streamed docs forever
-        from ..operators.indexer import _emit_positions
-        pcols = [c for c in ("shard", "docid", "terms", "term_pos")
-                 if c in docided.columns]
-        positions = (docided.select(*pcols)
-                     .mapInPandas(_emit_positions,
-                                  schema="shard int, term string, "
-                                         "docid long, positions array<int>"))
-        (positions.repartition(new_shard_count, "shard")
-                  .sortWithinPartitions("shard", "term", "docid")
-                  .write.mode("overwrite").options(**dyn).partitionBy("shard")
-                  .parquet(f"{index_path}/positions"))
-
-    # term-stats DELTA from the new shards only — an additive seg partition,
-    # aggregated with the base at read time (indexer.read_term_stats); no
-    # full-postings rescan per micro-batch
-    # same exact-range bound as the norms pack: an orphan shard above this
-    # epoch's range (crashed larger run, no manifest) must not inflate the
-    # COMMITTED delta's df/cf — postings reads are shard-gated at query
-    # time, but a poisoned stats segment would skew idf for every query
-    delta = (read_parquet(spark, f"{index_path}/postings")
-             .where(this_epoch)
-             .groupBy("term").agg(F.sum("df").alias("df"),
-                                  F.sum("cf").alias("cf"))
-             .withColumn("seg", F.lit(first_shard)))
-    (delta.repartition(max(1, new_shard_count // 4))
-          .sortWithinPartitions("term")
-          .write.mode("overwrite").options(**dyn).partitionBy("seg")
-          .parquet(f"{index_path}/term_stats"))
+        write_positions(docided, f"{index_path}/positions", new_shard_count,
+                        dynamic=True)
+    write_term_stats(spark, index_path, first_shard, new_shard_count,
+                     where=this_epoch, dynamic=True)
 
     # ---- incremental global stats (manifest + this batch, no table scans)
-    batch_tf = int(read_parquet(spark, f"{stage}/sorted")
-                   .agg(F.sum("dl")).first()[0] or 0)
+    batch_tf = sum(int(r["dl"] or 0) for r in lineage)
     num_docs = int(meta["num_docs"]) + batch_rows
     total_tf = int(meta["total_tf"]) + batch_tf
     last_docid = next_docid + batch_rows - 1
@@ -202,8 +160,7 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_path: str,
     new_meta.update({
         "num_docs": num_docs,
         "total_tf": total_tf,
-        # Lucene computes avgFieldLength as a float32 (BM25Similarity)
-        "avgdl": float(np.float32(total_tf / num_docs)) if num_docs else 0.0,
+        "avgdl": float32_avgdl(total_tf, num_docs),
         "num_docs_ceil": (last_docid // docs_per_shard + 1) * docs_per_shard,
         "num_shards": last_docid // docs_per_shard + 1,
         "last_epoch": (epoch_id if epoch_id is not None else last_epoch),
@@ -289,9 +246,6 @@ def compact_index(spark: SparkSession, index_path: str,
     generation. Tiered mode refuses a size change loudly (kept base
     shards would need the OLD mapping — two functions at once).
     """
-    from ..operators.indexer import live_shard_pred
-    from ..operators.indexer import read_term_stats  # noqa: F401 (doc ref)
-
     if mode not in ("full", "tiered"):
         raise ValueError(f"unknown compaction mode {mode!r}")
     root = mf.read_manifest(index_path)
@@ -395,13 +349,16 @@ def compact_index(spark: SparkSession, index_path: str,
                 .withColumn("shard",
                             (F.col("docid") / F.lit(new_dps)).cast("int")))
 
-    dyn = {"partitionOverwriteMode": "dynamic"}
     # each table stages through _compact_stage first: Spark cannot
     # (correctly) overwrite a parquet path it is also reading from, and the
     # new generation's rows are derived from the old generation in the SAME
     # table. The stage is overwrite-mode → a crashed compaction's re-run
     # recomputes it cleanly.
     stage = f"{index_path}/_compact_stage"
+
+    def staged(df: DataFrame, table: str) -> DataFrame:
+        df.write.mode("overwrite").parquet(f"{stage}/{table}")
+        return read_parquet(spark, f"{stage}/{table}")
 
     # ---- norms + packed norms ------------------------------------------
     if dels_by_shard:
@@ -416,31 +373,22 @@ def compact_index(spark: SparkSession, index_path: str,
             [(int(s), int(d)) for s, a in dels_by_shard.items() for d in a],
             "shard int, docid long")
         wn = Window.partitionBy("shard").orderBy("docid")
-        renum = (norms.join(F.broadcast(merge_dels), ["shard", "docid"],
-                            "left_anti")
-                 .join(F.broadcast(mdf), "shard")
-                 .withColumn("new_docid",
-                             F.col("nb") + F.row_number().over(wn) - 1))
-        renum.select("shard", "docid", "new_docid", "id", "dl") \
-            .write.mode("overwrite").parquet(f"{stage}/remap_rows")
-        renum = read_parquet(spark, f"{stage}/remap_rows")
-        (renum.select(F.col("new_docid").alias("docid"), "id", "dl")
-         .withColumn("shard", (F.col("docid") / F.lit(new_dps)).cast("int"))
-         .write.mode("overwrite").parquet(f"{stage}/norms"))
+        renum = staged(norms.join(F.broadcast(merge_dels), ["shard", "docid"],
+                                  "left_anti")
+                       .join(F.broadcast(mdf), "shard")
+                       .withColumn("new_docid",
+                                   F.col("nb") + F.row_number().over(wn) - 1)
+                       .select("shard", "docid", "new_docid", "id", "dl"),
+                       "remap_rows")
+        new_norms = (renum.select(F.col("new_docid").alias("docid"), "id", "dl")
+                     .withColumn("shard",
+                                 (F.col("docid") / F.lit(new_dps)).cast("int")))
     else:
-        (remapped(norms.select("shard", "docid", "id", "dl"))
-         .write.mode("overwrite").parquet(f"{stage}/norms"))
-    (read_parquet(spark, f"{stage}/norms")
-     .repartition(new_shard_count, "shard").sortWithinPartitions("docid")
-     .write.mode("overwrite").options(**dyn).partitionBy("shard")
-     .parquet(f"{index_path}/norms"))
-    (read_parquet(spark, f"{index_path}/norms")
-     .where(F.col("shard") >= new_base_shard)
-     .groupBy("shard")
-     .applyInPandas(_pack_norms(new_dps),
-                    schema="shard int, base long, n long, codes binary")
-     .write.mode("overwrite").options(**dyn).partitionBy("shard")
-     .parquet(f"{index_path}/norms_packed"))
+        new_norms = remapped(norms.select("shard", "docid", "id", "dl"))
+    write_norms(staged(new_norms, "norms"), f"{index_path}/norms",
+                new_shard_count, dynamic=True)
+    write_norms_packed(spark, index_path, new_dps,
+                       where=F.col("shard") >= new_base_shard, dynamic=True)
 
     # ---- postings: decode per old shard, remap, re-encode ---------------
     old_posts = merge(read_parquet(spark, f"{index_path}/postings"))
@@ -450,14 +398,9 @@ def compact_index(spark: SparkSession, index_path: str,
                    _make_decode_remap_kernel(dps, remap, dels_by_shard,
                                              new_docs_per_shard=new_dps),
                    schema="shard int, term string, docid long, tf int"))
-    (tf_rows.repartition(new_shard_count, "shard")
-     .sortWithinPartitions("shard", "term", "docid")
-     .mapInPandas(_make_postings_kernel(block_size, new_dps),
-                  schema=POSTINGS_SCHEMA)
-     .write.mode("overwrite").parquet(f"{stage}/postings"))
-    (read_parquet(spark, f"{stage}/postings")
-     .write.mode("overwrite").options(**dyn).partitionBy("shard")
-     .parquet(f"{index_path}/postings"))
+    write_shards(staged(encode_postings(tf_rows, new_shard_count, block_size,
+                                        new_dps), "postings"),
+                 f"{index_path}/postings", dynamic=True)
 
     # ---- positions sidecar (plain rows: remap only) ----------------------
     if positions:
@@ -467,8 +410,7 @@ def compact_index(spark: SparkSession, index_path: str,
             # position rows drop out, survivors take their new docid. A
             # doc-keyed shuffle of the MERGED range only — the delete path
             # costs nothing when no tombstones are pending (branch above)
-            rmap = (read_parquet(spark, f"{stage}/remap_rows")
-                    .select("shard", "docid", "new_docid"))
+            rmap = renum.select("shard", "docid", "new_docid")
             pos = (pos.join(rmap, ["shard", "docid"])
                    .drop("docid", "shard")
                    .withColumnRenamed("new_docid", "docid")
@@ -476,13 +418,9 @@ def compact_index(spark: SparkSession, index_path: str,
                                (F.col("docid") / F.lit(new_dps)).cast("int")))
         else:
             pos = remapped(pos)
-        (pos
-         .repartition(new_shard_count, "shard")
-         .sortWithinPartitions("shard", "term", "docid")
-         .write.mode("overwrite").parquet(f"{stage}/positions"))
-        (read_parquet(spark, f"{stage}/positions")
-         .write.mode("overwrite").options(**dyn).partitionBy("shard")
-         .parquet(f"{index_path}/positions"))
+        write_shards(staged(positions_layout(pos, new_shard_count),
+                            "positions"),
+                     f"{index_path}/positions", dynamic=True)
 
     # ---- generation flip metadata (computed first: the stats scan needs
     # the NEW live predicate — kept ranges + new tail) ---------------------
@@ -512,13 +450,8 @@ def compact_index(spark: SparkSession, index_path: str,
         })
 
     # ---- term stats: ONE collapsed segment over the new live set ---------
-    (read_parquet(spark, f"{index_path}/postings")
-     .where(live_shard_pred(new_meta))
-     .groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-     .withColumn("seg", F.lit(new_base_shard))
-     .repartition(max(1, new_shard_count // 4)).sortWithinPartitions("term")
-     .write.mode("overwrite").options(**dyn).partitionBy("seg")
-     .parquet(f"{index_path}/term_stats"))
+    write_term_stats(spark, index_path, new_base_shard, new_shard_count,
+                     where=live_shard_pred(new_meta), dynamic=True)
 
     if dels_by_shard:
         # physical deletes change the collection statistics: num_docs
@@ -532,8 +465,7 @@ def compact_index(spark: SparkSession, index_path: str,
                .agg(F.sum("cf").alias("cf")).first())
         new_total_tf = int(row["cf"] or 0)
         new_meta["total_tf"] = new_total_tf
-        new_meta["avgdl"] = (float(np.float32(new_total_tf / num_docs))
-                             if num_docs else 0.0)
+        new_meta["avgdl"] = float32_avgdl(new_total_tf, num_docs)
 
     # ---- tombstone window flip (crash-safe: the carried set lands at a
     # FRESH batch number the old manifest window never reads; only the
@@ -592,8 +524,8 @@ def _make_decode_remap_kernel(docs_per_shard: int,
     the compaction by docid range.
 
     ``dels`` maps old shard → sorted ABSOLUTE tombstoned docids: their
-    rows are dropped and each survivor shifts down by the count of deleted
-    docids below it (one vectorized searchsorted per posting list), which
+    rows are dropped (the scorer-side row decode's tombstone mask) and each
+    survivor shifts down by the count of deleted docids below it, which
     matches the norms renumbering — nb + (docid - mn) - |dels < docid|.
 
     ``new_docs_per_shard`` (resharding): the OLD geometry decodes blobs
@@ -602,56 +534,37 @@ def _make_decode_remap_kernel(docs_per_shard: int,
     with a new shard size."""
     import pandas as pd
 
-    from ..operators.retrieve import _TermHandle
+    from ..operators.retrieve import _decode_rows
 
     out_dps = new_docs_per_shard or docs_per_shard
+    no_dels = np.empty(0, dtype=np.int64)
 
     def kernel(key, posts_pdf: pd.DataFrame,
                packed_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "shard": pd.Series(dtype=np.int32),
-            "term": pd.Series(dtype=object),
-            "docid": pd.Series(dtype=np.int64),
-            "tf": pd.Series(dtype=np.int32)})
-        if posts_pdf.empty:
-            return empty
-        if packed_pdf.empty:
+        old_shard = int(key[0])
+        if not posts_pdf.empty and packed_pdf.empty:
             # a shard with postings but no norms_packed row violates the
             # build invariant (every shard writes exactly one blob row);
             # dropping the postings here would be silent data loss — refuse
             # loudly like the docid-gap check above
             raise ValueError(
-                f"shard {int(key[0])} has postings but no norms_packed "
+                f"shard {old_shard} has postings but no norms_packed "
                 "row; index is corrupt — refusing to compact")
-        old_shard = int(key[0])
+        dels_s = (dels or {}).get(old_shard, no_dels)
+        got = None if posts_pdf.empty else _decode_rows(
+            posts_pdf, docs_per_shard,
+            {old_shard: dels_s - old_shard * docs_per_shard})
+        if got is None:
+            return pd.DataFrame({
+                "shard": pd.Series(dtype=np.int32),
+                "term": pd.Series(dtype=object),
+                "docid": pd.Series(dtype=np.int64),
+                "tf": pd.Series(dtype=np.int32)})
+        terms, _shards, d, tf = got
         mn, nb = remap[old_shard]
-        base = old_shard * docs_per_shard
-        dels_s = None if dels is None else dels.get(old_shard)
-        terms, docids, tfs = [], [], []
-        for row in posts_pdf.itertuples(index=False):
-            h = _TermHandle.from_row(row, base)
-            d, tf = h.decode(np.arange(len(h.block_last)))
-            if dels_s is not None and len(dels_s):
-                at = np.searchsorted(dels_s, d)
-                hit = (at < len(dels_s)) & (dels_s[np.minimum(
-                    at, len(dels_s) - 1)] == d)
-                d, tf, at = d[~hit], tf[~hit], at[~hit]
-                if not len(d):
-                    continue
-                new_ids = d - mn + nb - at  # shift by |dels < docid|
-            else:
-                new_ids = d - mn + nb
-            docids.append(new_ids)
-            tfs.append(tf)
-            terms.append(np.full(len(d), row.term, dtype=object))
-        if not terms:
-            return empty
-        docid = np.concatenate(docids)
-        return pd.DataFrame({
-            "shard": (docid // out_dps).astype(np.int32),
-            "term": np.concatenate(terms),
-            "docid": docid,
-            "tf": np.concatenate(tfs).astype(np.int32)})
+        docid = d - mn + nb - np.searchsorted(dels_s, d)  # |dels < docid|
+        return pd.DataFrame({"shard": (docid // out_dps).astype(np.int32),
+                             "term": terms, "docid": docid, "tf": tf})
 
     return kernel
 

@@ -107,6 +107,20 @@ class TestCorruption:
         assert not rep["norms_packed"]["ok"]
         assert any(r[0] == 1 for r in rep["norms_packed"]["bad_shards"])
 
+    def test_search_refuses_missing_packed_shard(self, spark, tmp_path,
+                                                 index_copy):
+        """A live shard with postings but no norms_packed row is corrupt:
+        a plain search must refuse it, not drop the shard's hits."""
+        import shutil
+
+        from patapsco_spark.operators.retrieve import search_texts
+
+        idx = _base(index_copy, spark, tmp_path / "idx")
+        shutil.rmtree(f"{idx}/norms_packed/shard=1")
+        with pytest.raises(Exception, match="no norms_packed row"):
+            search_texts(spark, idx, [("q1", "filter scan")],
+                         text_cfg=CFG).collect()
+
     def test_missing_norms_shard_flagged(self, spark, tmp_path, index_copy):
         """Review fix: a shard with a packed blob but NO norms rows must be
         flagged (null-safe full-join filter), not silently pass."""
